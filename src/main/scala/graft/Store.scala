@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap}
+import java.util.concurrent.atomic.AtomicInteger
 
 import graft.fts.Fts
 import graft.sparql.{Materialize, RdfTables}
@@ -27,8 +28,18 @@ import org.apache.spark.sql.functions._
   *    `handle.rs:4999-5008`), clustered by predicate (classic RDF vertical
   *    partitioning) — predicate-constant pattern scans skip row groups, and
   *    scans need NO per-pattern dropDuplicates shuffle.
-  *  - `postings`: the FTS index clustered by token — a query's token filter
-  *    prunes via parquet min/max stats instead of re-tokenizing the corpus.
+  *  - `postings`: the FTS index, bucketed by `graph_iri` and sorted by
+  *    `token` within each bucket — a query's token filter prunes row groups
+  *    via parquet min/max stats instead of re-tokenizing the corpus, and the
+  *    per-document BM25 work runs inside the buckets with no exchange. Built
+  *    with it: the doc-length table `(graph_iri, dl)`, bucketed the same
+  *    way, the per-token `(token, df)` table, and N and avgdl
+  *    ([[corpusStats]]).
+  *  - `triplesBucketed`/`bucketedRel`: catalog tables bucketed by a join
+  *    key, so joins on that key run with no exchange.
+  *
+  * Every layout is built once per (session, dir, name): concurrent first
+  * callers share one build (`singleFlight`).
   */
 object Store {
 
@@ -44,31 +55,61 @@ object Store {
     ()
   }
 
-  private val tables = new ConcurrentHashMap[String, DataFrame]()
+  /** One build per key: the first caller runs it, every concurrent caller
+    * waits for that build and gets the same value. A failed build is
+    * removed, so a later call tries again.
+    *
+    * NOT computeIfAbsent: a table's build may itself materialize another
+    * table (cat5/cat6's IRI index builds over the quads store), and a
+    * nested computeIfAbsent on the same ConcurrentHashMap throws
+    * "Recursive update" whenever the two keys land in one hash bin. The
+    * map only holds futures; no lock is held while a build runs, so nested
+    * builds of different keys proceed. */
+  private val builds = new ConcurrentHashMap[String, CompletableFuture[AnyRef]]()
+
+  private def singleFlight[T <: AnyRef](key: String)(build: => T): T = {
+    val mine = new CompletableFuture[AnyRef]()
+    val running = builds.putIfAbsent(key, mine)
+    if (running != null)
+      try running.join().asInstanceOf[T]
+      catch { case e: CompletionException if e.getCause != null => throw e.getCause }
+    else
+      try {
+        val built = build
+        mine.complete(built)
+        built
+      } catch {
+        case e: Throwable =>
+          builds.remove(key, mine)
+          mine.completeExceptionally(e)
+          throw e
+      }
+  }
 
   /** Build-once-per-(session, dir) table: `write` materializes to the given
-    * path; the returned frame is a plain parquet scan of it.
-    *
-    * NOT computeIfAbsent: a table's `write` may itself materialize another
-    * cached table (cat5/cat6's IRI index builds over the quads store), and
-    * a nested computeIfAbsent on the same ConcurrentHashMap throws
-    * "Recursive update" whenever the two keys land in one hash bin — which
-    * key set (and therefore which round) trips it is pure hash accident.
-    * Compute OUTSIDE the map, then putIfAbsent; a concurrent duplicate
-    * build is idempotent (same deterministic path, overwrite mode). */
+    * path; the returned frame is a plain parquet scan of it. */
   private def cached(spark: SparkSession, dir: String, name: String)(
       write: String => Unit): DataFrame = {
     val key = s"${System.identityHashCode(spark)}:$dir:$name"
-    val existing = tables.get(key)
-    if (existing != null) existing
-    else {
+    singleFlight(key) {
       val path = root.resolve(s"${Integer.toHexString(key.hashCode)}-$name").toString
       write(path)
-      val df = spark.read.parquet(path)
-      val raced = tables.putIfAbsent(key, df)
-      if (raced != null) raced else df
+      spark.read.parquet(path)
     }
   }
+
+  private val tableIds = new AtomicInteger()
+
+  /** Build-once catalog table: `save` gets a fresh table name and a path
+    * under the store root and must `saveAsTable` there, so bucketing
+    * metadata lives in the session catalog. Returns the table name. */
+  private def savedTable(key: String, prefix: String)(
+      save: (String, String) => Unit): String =
+    singleFlight(key) {
+      val n = s"${prefix}_${tableIds.getAndIncrement()}_${Integer.toHexString(key.hashCode & 0x7fffffff)}"
+      save(n, root.resolve(s"bucketed-$n").toString)
+      n
+    }
 
   /** Public build-once-per-(session, dir) hook for gate-local materialized
     * layouts whose input relation lives with the gate (e.g. the planted
@@ -98,6 +139,23 @@ object Store {
         .write.mode("overwrite").parquet(p)
     }
 
+  /** A relational table bucketed (and sorted) by a join key — the SMB
+    * (sort-merge-bucket) layout: two tables bucketed the same way join
+    * with ZERO exchanges and no sort, which at 100 TB removes the entire
+    * fact-fact shuffle (the dominant cost of an orders⋈lineitem-shaped
+    * join). */
+  def bucketedRel(spark: SparkSession, dir: String, table: String,
+      key: String, buckets: Int = 16): DataFrame = {
+    val k = s"${System.identityHashCode(spark)}:$dir:rel:$table:$key:$buckets"
+    spark.table(savedTable(k, s"graft_rel_$table") { (n, path) =>
+      Tables.read(spark, dir, table)
+        .write.mode("overwrite")
+        .bucketBy(buckets, key).sortBy(key)
+        .option("path", path)
+        .saveAsTable(n)
+    })
+  }
+
   /** Predicate-partitioned, subject-bucketed default-graph triples: the BGP
     * layout. Every triple-pattern scan filters by predicate — a partition
     * DIRECTORY here, so each pattern reads exactly its predicate's files
@@ -106,42 +164,13 @@ object Store {
     * n-pattern star chain with ZERO exchanges (bucket-local sort-merge
     * joins). At 100 TB the per-pattern shuffle of the triple store IS the
     * BGP cost; this layout removes it, mirroring the reference's
-    * subject-major LSM key order. Registered as an external parquet table
-    * so the bucketing metadata lives in the session catalog. */
-  private val bucketedNames = new ConcurrentHashMap[String, String]()
-
-  /** A relational table bucketed (and sorted) by a join key — the SMB
-    * (sort-merge-bucket) layout: two tables bucketed the same way join
-    * with ZERO exchanges and no sort, which at 100 TB removes the entire
-    * fact-fact shuffle (the dominant cost of an orders⋈lineitem-shaped
-    * join). Registered via saveAsTable so the bucketing metadata lives in
-    * the session catalog. */
-  def bucketedRel(spark: SparkSession, dir: String, table: String,
-      key: String, buckets: Int = 16): DataFrame = {
-    val k = s"${System.identityHashCode(spark)}:$dir:$table:$key:$buckets"
-    // same non-reentrant pattern as `cached` (no nested computeIfAbsent)
-    val name = Option(bucketedNames.get(k)).getOrElse {
-      val n = s"graft_rel_${table}_${bucketedNames.size()}_${Integer.toHexString(k.hashCode & 0x7fffffff)}"
-      val path = root.resolve(s"bucketed-$n").toString
-      Tables.read(spark, dir, table)
-        .write.mode("overwrite")
-        .bucketBy(buckets, key).sortBy(key)
-        .option("path", path)
-        .saveAsTable(n)
-      Option(bucketedNames.putIfAbsent(k, n)).getOrElse(n)
-    }
-    spark.table(name)
-  }
-
+    * subject-major LSM key order. */
   def triplesBucketed(spark: SparkSession, dir: String, buckets: Int = 32): DataFrame = {
     // exact (session, dir, buckets) key → table name: a dir-hash-derived
     // name alone would silently serve the wrong dataset on a hash
     // collision, or the old bucketing on a buckets change
-    val key = s"${System.identityHashCode(spark)}:$dir:$buckets"
-    // same non-reentrant pattern as `cached` (no nested computeIfAbsent)
-    val name = Option(bucketedNames.get(key)).getOrElse {
-      val n = s"graft_triples_sub_${bucketedNames.size()}_${Integer.toHexString(key.hashCode & 0x7fffffff)}"
-      val path = root.resolve(s"bucketed-$n").toString
+    val key = s"${System.identityHashCode(spark)}:$dir:triples_sub:$buckets"
+    spark.table(savedTable(key, "graft_triples_sub") { (n, path) =>
       RdfTables.quads(spark, dir)
         .drop("graph_iri")
         .distinct()
@@ -150,19 +179,51 @@ object Store {
         .bucketBy(buckets, "subject").sortBy("subject")
         .option("path", path)
         .saveAsTable(n)
-      Option(bucketedNames.putIfAbsent(key, n)).getOrElse(n)
-    }
-    spark.table(name)
+    })
   }
 
-  /** FTS postings index clustered by token. */
-  def postings(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "postings") { p =>
-      Fts.postings(RdfTables.quads(spark, dir))
-        .repartition(col("token"))
-        .sortWithinPartitions("token", "graph_iri", "subject_iri")
-        .write.mode("overwrite").parquet(p)
+  /** Bucket count of the postings and doc-length tables: both are bucketed
+    * by `graph_iri` the same way, so a search joins them bucket to bucket. */
+  private val PostingsBuckets = 8
+
+  /** Frames [[postings]] returned → the statistics built with them. Keyed by
+    * frame identity: a frame derived from the index (filtered, folded) is a
+    * different corpus and gets no entry. */
+  private val postingsStats =
+    java.util.Collections.synchronizedMap(new java.util.IdentityHashMap[DataFrame, Fts.CorpusStats]())
+
+  /** FTS postings index, bucketed by `graph_iri` and sorted by `token`
+    * within each bucket, built once per (session, dir) together with its
+    * BM25 statistics (see [[corpusStats]]). Every call returns the same
+    * frame. */
+  def postings(spark: SparkSession, dir: String): DataFrame = {
+    val key = s"${System.identityHashCode(spark)}:$dir:postings"
+    singleFlight(key) {
+      def bucketed(df: DataFrame, sortCol: String, prefix: String): DataFrame =
+        spark.table(savedTable(s"$key:$prefix", prefix) { (n, path) =>
+          df.repartition(PostingsBuckets, col("graph_iri"))
+            .write.mode("overwrite")
+            .bucketBy(PostingsBuckets, "graph_iri").sortBy(sortCol)
+            .option("path", path)
+            .saveAsTable(n)
+        })
+      val postings = bucketed(Fts.postings(RdfTables.quads(spark, dir)), "token", "graft_postings")
+      val lengths = bucketed(Fts.docLengths(postings), "graph_iri", "graft_doclen")
+      val freqs = cached(spark, dir, "doc_freq") { p =>
+        Fts.docFrequencies(postings)
+          .repartition(col("token"))
+          .sortWithinPartitions("token")
+          .write.mode("overwrite").parquet(p)
+      }
+      postingsStats.put(postings, Fts.CorpusStats.of(lengths, freqs))
+      postings
     }
+  }
+
+  /** The BM25 statistics maintained with the index, when `postings` is the
+    * frame [[postings]] returned; None for any other frame. */
+  def corpusStats(postings: DataFrame): Option[Fts.CorpusStats] =
+    Option(postingsStats.get(postings))
 
   /** Cell-partitioned IVF ANN index over the embeddings table (the
     * [[graft.similarity.Ann.writeIvfIndex]] layout: one parquet directory

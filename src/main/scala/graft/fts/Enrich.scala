@@ -1,11 +1,14 @@
 package graft.fts
 
-import graft.sparql.{Kind, RdfTables}
+import scala.jdk.CollectionConverters._
+
+import graft.sparql.{Kind, Materialize, RdfTables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
-/** Hit enrichment (reference `search_enrichment.rs`):
+/** Hit enrichment (reference `search_enrichment.rs`), applied to one page
+  * of search hits:
   *
   *  - `hit_title` (`:14-38`): schema:name literal, else last path segment of
   *    the subject IRI, else the document path.
@@ -17,51 +20,6 @@ object Enrich {
 
   val SnippetMaxLen = 160
   val SnippetLead = 40
-
-  /** (graph_iri, subject_iri, content) — the describe-join input: all indexed
-    * literal values of each subject, deterministically ordered by field. */
-  def describe(quads: DataFrame): DataFrame = {
-    val fieldRank = Fts.IndexedFields.values.toSeq.sorted.zipWithIndex.toMap
-    val rank = Fts.IndexedFields.foldLeft(lit(99)) { case (acc, (iri, name)) =>
-      when(col("predicate") === iri, lit(fieldRank(name))).otherwise(acc)
-    }
-    quads
-      .filter(col("obj_kind") === Kind.Literal &&
-        col("predicate").isin(Fts.IndexedFields.keys.toSeq: _*))
-      .select(col("graph_iri"), col("subject").as("subject_iri"),
-        struct(rank.as("r"), col("obj_value").as("v")).as("rv"))
-      .groupBy(col("graph_iri"), col("subject_iri"))
-      .agg(array_join(transform(array_sort(collect_list(col("rv"))), _.getField("v")), " ")
-        .as("content"))
-  }
-
-  /** (graph_iri, subject_iri, title) per hit_title precedence. `registry`
-    * supplies the document-path fallback. */
-  def titles(quads: DataFrame, registry: DataFrame): DataFrame = {
-    val names = quads
-      .filter(col("predicate") === RdfTables.SchemaNs + "name" &&
-        col("obj_kind") === Kind.Literal)
-      .groupBy(col("graph_iri"), col("subject").as("subject_iri"))
-      .agg(min(col("obj_value")).as("name"))
-    val subjects = quads
-      .select(col("graph_iri"), col("subject").as("subject_iri")).distinct()
-    subjects
-      .join(names, Seq("graph_iri", "subject_iri"), "left_outer")
-      // 1:1 PER (graph_iri, subject_iri) is load-bearing (r14 ADVICE): the
-      // fts3 page-then-enrich commute (FtsQueries) only holds because these
-      // enrich joins never inflate the hit count. `names` is grouped above;
-      // `registry` carries ONE row per graph_iri by fixture contract
-      // (RdfTables.registry derives it 1:1 from documents) — a future
-      // registry with duplicate graph_iri rows would inflate a paged hit
-      // past its LIMIT, so that contract must hold (deduping here would add
-      // an exchange to every enrich for a case that cannot occur).
-      .join(registry.select(col("graph_iri"), col("document_path")), Seq("graph_iri"), "left_outer")
-      .withColumn("title", coalesce(
-        col("name"),
-        nullif(regexp_extract(col("subject_iri"), "([^/#:]+)$", 1), lit("")),
-        col("document_path")))
-      .select("graph_iri", "subject_iri", "title")
-  }
 
   /** Snippet: window around the first query-token occurrence, else prefix. */
   val snippetUdf: UserDefinedFunction = udf { (content: String, tokens: Seq[String]) =>
@@ -80,37 +38,69 @@ object Enrich {
     }
   }
 
+  /** The most hits one [[enrich]] call takes: the deepest page a cursor may
+    * reach plus one full page (`search_cursor.rs:13-15`). */
+  val MaxHitPage: Int = Search.MaxPaginationDepth + Search.MaxPageSize
+
+  /** Raised when the hits handed to [[enrich]] exceed [[MaxHitPage]] rows. */
+  final class HitPageTooLarge(val limit: Int)
+      extends RuntimeException(s"hit page exceeds $limit rows")
+
   /** Join hits with titles + snippets (the describe-join at
     * `handle.rs:5286-5292`).
     *
-    * The hit set is a page (≤ 1000 rows by the search clamps), so it is
-    * broadcast and quads/registry are SEMI-JOINED down to hit subjects
-    * BEFORE the title/describe aggregations — enrichment work is
-    * O(quads-of-hit-subjects), not O(corpus). At 100 TB the alternative
-    * (aggregate everything, join last) scans and shuffles the whole store
-    * to decorate 50 rows. */
+    * The hit page is collected once, bounded by [[MaxHitPage]], and carried
+    * on as a local relation, so its search lineage runs exactly once. Quads
+    * are then scoped to the hit graphs by literal `graph_bucket IN` /
+    * `graph_iri IN` predicates, which prune partition directories, and
+    * semi-joined to the broadcast hit (graph, subject) keys. One aggregate
+    * over those literals yields each hit's `name` and snippet `content`: one
+    * quads scan, O(quads-of-hit-subjects), not O(corpus). The title is
+    * `coalesce(name, last IRI segment, document_path)` on the hits.
+    *
+    * Output is 1:1 per hit row, which is load-bearing (r14 ADVICE): the
+    * fts3 page-then-enrich commute (FtsQueries) only holds because these
+    * joins never inflate the hit count. The aggregate is one row per
+    * (graph, subject), and `registry` carries ONE row per graph_iri by
+    * fixture contract (RdfTables.registry derives it 1:1 from documents). */
   def enrich(hits: DataFrame, quads: DataFrame, registry: DataFrame,
       query: String): DataFrame = {
-    val toks = Search.tokenize(query)
-    // the hit page is tiny (≤ 1000 rows by the search clamps) but its
-    // lineage is the whole search pipeline — materialize it ONCE so the
-    // two broadcast scopes + the final join don't re-run the search 3×
-    val hitPage = hits.localCheckpoint(true)
-    val hitKeys = hitPage.select(col("graph_iri"), col("subject_iri")).distinct()
-    val scopedQuads = quads.join(
-      broadcast(hitKeys.withColumnRenamed("subject_iri", "subject")),
-      Seq("graph_iri", "subject"), "left_semi")
-    val scopedRegistry = registry.join(
-      broadcast(hitKeys.select(col("graph_iri")).distinct()),
-      Seq("graph_iri"), "left_semi")
-    // titles/describe emit ≤ one row per hit subject (bounded by the same
-    // clamps as the page) — hint them broadcast; the static planner cannot
-    // see through the aggregation and falls back to a sort-merge join
+    val spark = hits.sparkSession
+    val rows = hits.limit(MaxHitPage + 1).collect()
+    if (rows.length > MaxHitPage) throw new HitPageTooLarge(MaxHitPage)
+    val hitPage = spark.createDataFrame(rows.toSeq.asJava, hits.schema)
+    val keys = rows.map(r => (r.getAs[String]("graph_iri"), r.getAs[String]("subject_iri"))).distinct
+    val graphs = keys.map(_._1).distinct.toSeq
+    val hitKeys = spark.createDataFrame(keys.toSeq).toDF("graph_iri", "subject")
+    val inGraphs = col("graph_iri").isin(graphs: _*)
+    val scope =
+      if (quads.columns.contains("graph_bucket"))
+        col("graph_bucket").isin(graphs.map(g => Materialize.bucketCol(lit(g))): _*) && inGraphs
+      else inGraphs
+    val fieldRank = Fts.IndexedFields.values.toSeq.sorted.zipWithIndex.toMap
+    val rank = Fts.IndexedFields.foldLeft(lit(99)) { case (acc, (iri, name)) =>
+      when(col("predicate") === iri, lit(fieldRank(name))).otherwise(acc)
+    }
+    val described = quads
+      .filter(scope && col("obj_kind") === Kind.Literal &&
+        col("predicate").isin(Fts.IndexedFields.keys.toSeq: _*))
+      .join(broadcast(hitKeys), Seq("graph_iri", "subject"), "left_semi")
+      .groupBy(col("graph_iri"), col("subject").as("subject_iri"))
+      .agg(
+        min(when(col("predicate") === RdfTables.SchemaNs + "name", col("obj_value"))).as("name"),
+        array_join(transform(array_sort(collect_list(
+          struct(rank.as("r"), col("obj_value").as("v")))), _.getField("v")), " ").as("content"))
+    val paths = registry.filter(inGraphs).select(col("graph_iri"), col("document_path"))
+    // both sides are at most one row per hit: broadcast them, the static
+    // planner cannot see through the aggregation or the filter
     hitPage
-      .join(broadcast(titles(scopedQuads, scopedRegistry)),
-        Seq("graph_iri", "subject_iri"), "left_outer")
-      .join(broadcast(describe(scopedQuads)), Seq("graph_iri", "subject_iri"), "left_outer")
-      .withColumn("snippet", snippetUdf(col("content"), lit(toks.toArray)))
-      .drop("content")
+      .join(broadcast(described), Seq("graph_iri", "subject_iri"), "left_outer")
+      .join(broadcast(paths), Seq("graph_iri"), "left_outer")
+      .withColumn("title", coalesce(
+        col("name"),
+        nullif(regexp_extract(col("subject_iri"), "([^/#:]+)$", 1), lit("")),
+        col("document_path")))
+      .withColumn("snippet", snippetUdf(col("content"), lit(Search.tokenize(query).toArray)))
+      .drop("name", "document_path", "content")
   }
 }

@@ -57,6 +57,25 @@ object Fts {
     postings.groupBy(col("graph_iri"))
       .agg(sum(col("tf")).as("dl"))
 
+  /** What BM25 needs of a corpus besides the query's postings:
+    * `docLengths(graph_iri, dl)`, `docFreqs(token, df)`, the document count
+    * `n` and the mean length `avgdl` (0 on an empty corpus). */
+  final case class CorpusStats(docLengths: DataFrame, docFreqs: DataFrame,
+      n: Long, avgdl: Double)
+
+  object CorpusStats {
+    /** Stats over given length and frequency tables; `n` and `avgdl` are
+      * one eager aggregate over the length table. */
+    def of(docLengths: DataFrame, docFreqs: DataFrame): CorpusStats = {
+      val t = docLengths.agg(count(lit(1)), avg(col("dl"))).head()
+      CorpusStats(docLengths, docFreqs, t.getLong(0), if (t.isNullAt(1)) 0.0 else t.getDouble(1))
+    }
+
+    /** Stats derived from any postings frame. */
+    def derive(postings: DataFrame): CorpusStats =
+      of(docLengths(postings), docFrequencies(postings))
+  }
+
   /** DuckDB CTE equivalent of [[postings]] over `documents` (uses the quads
     * derivation from [[RdfTables]]): reference as `postings`. */
   val postingsCte: String = postingsCteFrom("documents")

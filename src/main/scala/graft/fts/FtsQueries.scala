@@ -35,6 +35,15 @@ object FtsQueries {
       .orderBy(col("score_key").desc, col("graph_iri").asc, col("subject_iri").asc)
   }
 
+  /** fts3's hit page: BM25 → merge → the first 50 hits, the frame its
+    * enrichment collects. */
+  private[graft] def bm25Page(s: SparkSession, d: String): DataFrame = {
+    val hits = Search.bm25(postings(s, d), "spark merge fast")
+      .withColumn("document_id", regexp_extract(col("graph_iri"), "([0-9]+)$", 1))
+      .withColumn("snippet", lit(null: String))
+    Search.page(Search.mergeHits(hits), None, 50)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "fts1_postings" -> { (s, d) =>
       postings(s, d)
@@ -51,18 +60,13 @@ object FtsQueries {
     // full BM25 pipeline: scoring + merge + enrichment, hash-compared to
     // the DuckDB replica below on the quantized score_key
     "fts3_bm25_search" -> { (s, d) =>
-      val quads = graft.Store.quads(s, d)
-      val hits = Search.bm25(postings(s, d), "spark merge fast")
-        .withColumn("document_id", regexp_extract(col("graph_iri"), "([0-9]+)$", 1))
-        .withColumn("snippet", lit(null: String))
-      val merged = Search.mergeHits(hits)
       // page FIRST, enrich the 50 survivors: enrichment is 1:1 left joins
       // keyed by hit columns, so it commutes with the top-k — decorating
       // every merged hit only to discard all but a page scanned and
       // broadcast the whole hit set through the describe-joins
       // (r13 optimization, guide §1.2 step 1; ≡ proven by the unchanged
       // fts3 oracle, which enriches-then-limits)
-      Enrich.enrich(Search.page(merged, None, 50), quads,
+      Enrich.enrich(bm25Page(s, d), graft.Store.quads(s, d),
           RdfTables.registry(s, d), "spark merge fast")
         .orderBy(Search.hitOrder: _*)
         .select("graph_iri", "subject_iri", "score_key", "title", "snippet")

@@ -21,10 +21,18 @@ import org.apache.spark.sql.types.{FloatType, LongType}
   *    page size default 25 / max 100, depth cap 1000 (`:13-15`).
   *
   * Scale: scoring is a token-filtered join — only postings of the query's
-  * tokens are read (predicate pushdown on `token`); corpus stats (N, avgdl)
-  * are two scalar aggregates, cacheable per index generation. The global
-  * order-by is bounded by depth cap 1000, so a TakeOrdered(1000+page) plan,
-  * never a full sort at scale.
+  * tokens are read (predicate pushdown on `token`). Over the
+  * [[graft.Store.postings]] index the corpus statistics (document lengths,
+  * per-token document frequencies, N, avgdl) are the ones built with the
+  * index, as a tantivy segment keeps doc_freq and fieldnorms beside its
+  * postings, so a query runs no corpus aggregate and no eager job. That
+  * index and its doc-length table are bucketed by `graph_iri`, so the
+  * (token, graph, subject) fold, the doc-length join, the score aggregate
+  * and the [[mergeHits]] window all run inside the scan's buckets with no
+  * exchange. Any other postings frame (filtered, folded, in memory) is its
+  * own corpus and derives its statistics per query. The global order-by is
+  * bounded by depth cap 1000, so a TakeOrdered(1000+page) plan, never a
+  * full sort at scale.
   */
 object Search {
 
@@ -53,23 +61,22 @@ object Search {
       .withColumn("score_key", lit(0L))
       .limit(0)
     if (tokens.isEmpty) return emptyResult
-    val corpus = Fts.docLengths(postings)
-    // two scalar corpus stats (cache per index generation at scale)
-    val stats = corpus.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")).head()
-    val n = stats.getLong(0).toDouble
-    if (n == 0) return emptyResult // empty index: avgdl is NULL
-    val avgdl = stats.getDouble(1)
-    val matchedTokens = postings.filter(col("token").isin(tokens: _*))
-    val matched = matchedTokens
+    // the index's own statistics when given the Store frame; any other
+    // frame (filtered, folded, in-memory) is its own corpus
+    val stats = graft.Store.corpusStats(postings).getOrElse(Fts.CorpusStats.derive(postings))
+    if (stats.n == 0) return emptyResult
+    val n = stats.n.toDouble
+    val avgdl = stats.avgdl
+    val matched = postings.filter(col("token").isin(tokens: _*))
       .groupBy(col("token"), col("graph_iri"), col("subject_iri"))
       .agg(sum(col("tf")).as("tf")) // fold fields together
-    val dfreq = Fts.docFrequencies(matchedTokens)
+    val dfreq = stats.docFreqs.filter(col("token").isin(tokens: _*))
     val idf = log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5))
     val tfNorm = (col("tf") * (K1 + 1.0)) /
       (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / avgdl))
     val weighted = matched
       .join(broadcast(dfreq), "token")
-      .join(corpus, "graph_iri")
+      .join(stats.docLengths, "graph_iri")
       .withColumn("w", idf * tfNorm)
     weighted
       .groupBy(col("graph_iri"), col("subject_iri"))

@@ -223,8 +223,7 @@ object Compiler {
         // materialized layout: the foldable bucket predicate constant-folds
         // and prunes partition directories before file listing
         if (df.columns.contains("graph_bucket"))
-          df = df.filter(col("graph_bucket") ===
-            pmod(xxhash64(lit(c.value)), lit(Materialize.NumGraphBuckets)))
+          df = df.filter(col("graph_bucket") === Materialize.bucketCol(lit(c.value)))
       case _ =>
     }
     // bind variables

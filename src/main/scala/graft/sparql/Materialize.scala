@@ -16,7 +16,10 @@ object Materialize {
 
   val NumGraphBuckets = 64
 
-  private def bucketCol(g: org.apache.spark.sql.Column) =
+  /** The `graph_bucket` of a graph IRI. On a literal IRI the expression is
+    * foldable, so a filter comparing `graph_bucket` with it constant-folds
+    * and prunes partition directories. */
+  def bucketCol(g: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(xxhash64(g), lit(NumGraphBuckets))
 
   /** Write quads partitioned by graph bucket. */

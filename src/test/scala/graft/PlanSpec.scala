@@ -49,6 +49,38 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastExchange"), s"hit keys should broadcast:\n$p")
   }
 
+  test("fts3: hit page folds, scores and merges inside the postings buckets; no corpus aggregate") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val page = graft.fts.FtsQueries.bm25Page(spark, sf0001)
+    val p = page.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan // the initial plan, exchanges included
+      case other => other
+    }
+    def isPostings(n: SparkPlan) = n match {
+      case s: FileSourceScanExec => s.tableIdentifier.exists(_.table.startsWith("graft_postings_"))
+      case _ => false
+    }
+    // every operator chain from a merge Window down to the postings scan
+    def chains(n: SparkPlan): Seq[List[SparkPlan]] =
+      if (isPostings(n)) Seq(List(n))
+      else n.children.flatMap(chains).map(n :: _)
+    val windows = p.collect { case w: WindowExec => w }
+    assert(windows.nonEmpty, s"merge window missing:\n$p")
+    val toScan = windows.flatMap(chains)
+    assert(toScan.nonEmpty, s"no path from the merge window to the postings scan:\n$p")
+    assert(!toScan.exists(_.exists(_.isInstanceOf[ShuffleExchangeExec])),
+      s"exchange between the postings scan and the merge window:\n$p")
+    val graphOnly = p.collect {
+      case a: BaseAggregateExec if a.groupingExpressions.map(_.name) == Seq("graph_iri") &&
+        a.collectLeaves().exists(isPostings) => a
+    }
+    assert(graphOnly.isEmpty, s"per-query aggregate keyed on graph_iri over the postings:\n$p")
+  }
+
   test("sp1: default-graph BGP scans the materialized triples with no per-pattern dedup") {
     val p = plan("sp1_bgp")
     // pre-deduped store: the only aggregates allowed are none — a dedup would

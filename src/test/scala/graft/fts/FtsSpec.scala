@@ -127,17 +127,22 @@ class FtsSpec extends SparkSpec {
     assert(Search.bm25(corpus.limit(0), "spark").isEmpty)
   }
 
+  private lazy val enrichQuads = Seq(
+    ("g1", "doc:1", 0, "http://schema.org/name", 2, "Title One", "", ""),
+    ("g1", "http://x/path/seg42", 0, "http://schema.org/description", 2,
+      "aaa " * 30 + "needle in the middle " + "bbb " * 30, "", ""),
+    ("g1", "nameless:", 0, "http://schema.org/description", 2, "no name here", "", "")
+  ).toDF("graph_iri", "subject", "subject_kind", "predicate", "obj_kind",
+    "obj_value", "obj_lang", "obj_datatype")
+  private lazy val enrichRegistry = Seq(("g1", "/docs/path-1")).toDF("graph_iri", "document_path")
+
   test("enrichment: title precedence and snippet windowing") {
-    val quads = Seq(
-      ("g1", "doc:1", 0, "http://schema.org/name", 2, "Title One", "", ""),
-      ("g1", "http://x/path/seg42", 0, "http://schema.org/description", 2,
-        "aaa " * 30 + "needle in the middle " + "bbb " * 30, "", ""),
-      ("g1", "nameless:", 0, "http://schema.org/description", 2, "no name here", "", "")
-    ).toDF("graph_iri", "subject", "subject_kind", "predicate", "obj_kind",
-      "obj_value", "obj_lang", "obj_datatype")
-    val registry = Seq(("g1", "/docs/path-1")).toDF("graph_iri", "document_path")
-    val titles = Enrich.titles(quads, registry).collect()
-      .map(r => r.getString(1) -> r.getString(2)).toMap
+    val quads = enrichQuads
+    val registry = enrichRegistry
+    val titled = hitsDf(Seq("doc:1", "http://x/path/seg42", "nameless:").zipWithIndex
+      .map { case (s, i) => ("g1", s, 10L - i, s"0$i", null: String) })
+    val titles = Enrich.enrich(titled, quads, registry, "needle").collect()
+      .map(r => r.getAs[String]("subject_iri") -> r.getAs[String]("title")).toMap
     assert(titles("doc:1") == "Title One")
     assert(titles("http://x/path/seg42") == "seg42") // last path segment
     assert(titles("nameless:") == "/docs/path-1") // document-path fallback
@@ -147,5 +152,48 @@ class FtsSpec extends SparkSpec {
     val snip = enriched.getAs[String]("snippet")
     assert(snip.contains("needle"))
     assert(snip.length <= Enrich.SnippetMaxLen)
+  }
+
+  test("enrichment takes a hit page of MaxHitPage rows and refuses one row more") {
+    def page(n: Int) = hitsDf((0 until n).map(i => ("g1", s"doc:$i", i.toLong, "01", null: String)))
+    assert(Enrich.enrich(page(0), enrichQuads, enrichRegistry, "title").count() == 0)
+    val atBound = Enrich.enrich(page(Enrich.MaxHitPage), enrichQuads, enrichRegistry, "title")
+    assert(atBound.count() == Enrich.MaxHitPage)
+    assert(atBound.filter($"subject_iri" === "doc:1").head().getAs[String]("title") == "Title One")
+    val e = intercept[Enrich.HitPageTooLarge](
+      Enrich.enrich(page(Enrich.MaxHitPage + 1), enrichQuads, enrichRegistry, "title"))
+    assert(e.limit == Enrich.MaxHitPage)
+  }
+
+  private def scored(df: org.apache.spark.sql.DataFrame) =
+    df.select("graph_iri", "subject_iri", "score_key").collect().map(_.toSeq).toSet
+
+  private def inMemory(df: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  test("bm25: statistics maintained with the Store index ≡ statistics derived from the same rows") {
+    val index = graft.Store.postings(spark, sf0001)
+    assert(graft.Store.corpusStats(index).isDefined)
+    val rebuilt = inMemory(index)
+    assert(graft.Store.corpusStats(rebuilt).isEmpty)
+    for (q <- Seq("spark merge fast", "author window", "zzqqxx", "  ")) {
+      val maintained = scored(Search.bm25(index, q))
+      assert(maintained == scored(Search.bm25(rebuilt, q)), s"query '$q'")
+      if (q == "spark merge fast") assert(maintained.nonEmpty)
+      if (q.trim.isEmpty || q == "zzqqxx") assert(maintained.isEmpty, s"query '$q'")
+    }
+  }
+
+  test("bm25: a filtered Store index frame is its own corpus (derived statistics)") {
+    val index = graft.Store.postings(spark, sf0001)
+    val half = index.filter(length($"graph_iri") % 2 === 0)
+    assert(graft.Store.corpusStats(half).isEmpty)
+    val q = "spark merge fast"
+    val got = scored(Search.bm25(half, q))
+    assert(got.nonEmpty)
+    assert(got == scored(Search.bm25(inMemory(half), q)))
+    // the maintained N and avgdl would score the same hits differently
+    val full = scored(Search.bm25(index, q)).filter(r => got.exists(g => g.take(2) == r.take(2)))
+    assert(full != got)
   }
 }

@@ -1,12 +1,17 @@
 #!/usr/bin/env python3
 """Local simulation of the driver's correctness gate.
 
-Usage:  python3 tools/oracle_check.py <sfDir> <verifyOutDir>
+Usage:  python3 tools/oracle_check.py <sfDir> <verifyOutDir> [prefixes]
 
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB against the
 parquet tables in <sfDir>, canonicalizes (sort columns by name, sort rows),
 and reports match/mismatch per query.
+
+[prefixes] is the same optional comma-separated name-prefix filter that
+graft.Verify takes. Every selected oracle must have an output directory: one
+without (its gate threw in Verify, or was never run) counts as [MISSING] and
+as bad.
 """
 import json
 import sys
@@ -25,7 +30,12 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-def main(sf_dir: str, out_dir: str) -> int:
+def main(sf_dir: str, out_dir: str, prefixes: str = "") -> int:
+    only = [p for p in prefixes.split(",") if p]
+
+    def selected(name: str) -> bool:
+        return not only or any(name.startswith(p) for p in only)
+
     con = duckdb.connect()
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
@@ -33,11 +43,18 @@ def main(sf_dir: str, out_dir: str) -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.loads((Path(out_dir) / "oracle_sql.json").read_text())
     n_ok = n_bad = n_noracle = 0
-    for qdir in sorted(Path(out_dir).iterdir()):
-        if not qdir.is_dir():
+    dirs = {q.name for q in Path(out_dir).iterdir() if q.is_dir()}
+    for name in sorted(n for n in oracle if selected(n) and n not in dirs):
+        n_bad += 1
+        print(f"  [MISSING] {name}: oracle has no output directory")
+    for name in sorted(n for n in dirs if selected(n)):
+        qdir = Path(out_dir) / name
+        try:
+            got = pd.read_parquet(qdir)
+        except Exception as e:
+            n_bad += 1
+            print(f"  [READ-ERR] {name}: {e}")
             continue
-        name = qdir.name
-        got = pd.read_parquet(qdir)
         if name not in oracle:
             n_noracle += 1
             print(f"  [rows-only] {name}: {len(got)} rows")
@@ -97,4 +114,4 @@ def main(sf_dir: str, out_dir: str) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(*sys.argv[1:4]))
