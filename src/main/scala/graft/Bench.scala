@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): one JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
   *
@@ -30,20 +28,7 @@ object Bench {
     // dev-only (scale probes): fewer timed passes; the driver never sets it
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(TimedPasses)
     // the driver contract is local[32]; the env override exists for dev runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // rank-limit windows (heads, pages, queue probes) must rewrite to
-      // map-side WindowGroupLimits; the default threshold (1000) is below
-      // the 8192 queue-probe scan cap (QueueLag.PageSize*PageLimit)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16384")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // dev-only: SPARK_GRAFT_ONLY=dd2,or1 restricts the suite for iteration,
     // SPARK_GRAFT_SKIP excludes gates (scale probes drop the by-contract
     // quadratics); the driver never sets either, so the official run is
@@ -65,13 +50,11 @@ object Bench {
         failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
       }
       // Round-7 lesson: 290 gates x 4 passes in ONE JVM accumulated every
-      // gate's tracked persists/broadcasts (Caches is drained lazily at the
-      // next SPARQL/pipeline entry point, which most gate families never
-      // hit) — block-manager pressure built up over the 16-minute suite and
-      // inflated late-alphabet gates 2-13x vs isolation in the driver's
-      // official r7 run. Drain after EVERY invocation (outside the timed
-      // region): the one-query-in-flight contract holds here by
-      // construction, and a released block recomputes from lineage.
+      // gate's tracked persists/broadcasts — block-manager pressure built
+      // up over the 16-minute suite and inflated late-alphabet gates 2-13x
+      // vs isolation in the official r7 run. The caller owns release (see
+      // graft.Caches), so release after EVERY invocation, outside the timed
+      // region.
       graft.Caches.release()
     }
     val best = scala.collection.mutable.LinkedHashMap[String, Double]()

@@ -3,54 +3,46 @@ package graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
-/** Session-lifetime cache hygiene for iterative operators.
+/** Release registry for the caches a query leaves behind.
   *
   * Fixpoint operators ([[graft.sparql.PathCompiler]] closures, the orphan
-  * reachability filter) must cache their per-round barriers AND their final
-  * result (the consumer's action re-reads it). Those caches cannot be
-  * unpersisted inside the operator — the returned DataFrame is lazy and the
-  * consumer has not materialized it yet — so they register here instead, and
-  * the NEXT query's entry point (or an explicit caller) drains the registry.
-  * By then the previous query has been materialized; if a released block is
-  * ever re-read, Spark recomputes it from lineage (shuffle files persist),
-  * so release is always safe, never wrong.
+  * reachability filter) and the dedup operators cache barriers, derived
+  * relations and broadcasts that the returned DataFrame still reads. The
+  * frame is lazy, so the operator cannot release them itself; it registers
+  * them here instead.
   *
-  * This bounds block-manager growth to O(one query) in a long-lived service
-  * — without it every path/orphan query leaks cached RDDs for the session
-  * lifetime (the round-2 finding).
-  *
-  * Contract: ONE query in flight at a time (the driver gate's execution
-  * model). Composing two entry points into a single lazy plan — e.g.
-  * unioning two `filterOrphaned` results before any action — is still
-  * CORRECT: a released block recomputes from lineage (shuffle files
-  * persist), so early release can cost recomputation, never wrong results.
-  * Callers needing cross-query cache lifetimes should persist outside this
-  * registry.
+  * Contract: registrations belong to the thread that built the frame, and
+  * that thread's caller releases them with [[release]] once the frame's
+  * action has run. One query is in flight per thread; queries on other
+  * threads keep their caches, so a session can serve concurrent queries.
+  * The engine never releases on its own. Composing two queries into one
+  * lazy plan before any action is still correct: a released RDD recomputes
+  * from lineage. A destroyed broadcast cannot, so release only after the
+  * action.
   */
 object Caches {
 
-  private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
+  private val tracked = ThreadLocal.withInitial(() => new java.util.ArrayDeque[() => Unit]())
 
-  /** Register a cached RDD for release at the next entry-point drain. */
-  def track(rdd: RDD[_]): Unit = tracked.add(() => rdd.unpersist(blocking = false))
+  /** Register a cached RDD with the calling thread. */
+  def track(rdd: RDD[_]): Unit = tracked.get.add(() => rdd.unpersist(blocking = false))
 
-  /** Register a persisted DataFrame for release at the next drain. */
-  def track(df: DataFrame): Unit = tracked.add(() => { df.unpersist(blocking = false); () })
+  /** Register a persisted DataFrame with the calling thread. */
+  def track(df: DataFrame): Unit = tracked.get.add(() => { df.unpersist(blocking = false); () })
 
   /** Register a broadcast variable (e.g. the incremental-dedup Bloom
-    * filter, ~GB-scale per its sizing doc) for destruction at the next
-    * drain. Broadcasts are driver+executor memory, not block-manager cache,
-    * so leaking them across repeated gate/bench invocations accumulates
-    * until OOM; same one-query-in-flight contract as the RDD/DF overloads
-    * (a destroyed broadcast canNOT recompute — callers must materialize
-    * before the next drain). */
+    * filter) with the calling thread, for destruction at its release:
+    * broadcasts hold driver and executor memory outside the block-manager
+    * cache, so a leaked one accumulates until OOM. */
   def track(b: org.apache.spark.broadcast.Broadcast[_]): Unit =
-    tracked.add(() => b.destroy())
+    tracked.get.add(() => b.destroy())
 
-  /** Drain: unpersist everything registered since the previous drain. */
+  /** Release everything the calling thread registered since its last
+    * release. */
   def release(): Unit = {
-    var r = tracked.poll()
-    while (r != null) { r(); r = tracked.poll() }
+    val mine = tracked.get
+    var r = mine.poll()
+    while (r != null) { r(); r = mine.poll() }
   }
 
   /** Lineage barrier for iterative operators: a fresh LogicalRDD with no

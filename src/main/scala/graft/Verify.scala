@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,19 +7,7 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     // optional comma-separated name-prefix filter for local iteration
     val only = rest.headOption.map(_.split(',').toSeq.filter(_.nonEmpty))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // rank-limit windows (heads, pages, queue probes) must rewrite to
-      // map-side WindowGroupLimits; the default threshold (1000) is below
-      // the 8192 queue-probe scan cap (QueueLag.PageSize*PageLimit)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16384")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }

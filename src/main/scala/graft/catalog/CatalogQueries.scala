@@ -15,7 +15,7 @@ object CatalogQueries {
   private val ConformsTo = RdfTables.ConformsTo
 
   /** The versions keyspace, persisted for the life of ONE gate invocation
-    * (released at the next entry-point drain, like every gate-local cache).
+    * (registered with [[graft.Caches]], like every gate-local cache).
     * The request-batch gates read the store 4-8× (request branches + the
     * heads/by-version sides of the resolution ladder) and each read
     * re-decoded the parquet — the dominant cost of goa1/cat15/cat13/cat14/

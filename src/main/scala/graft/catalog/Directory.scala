@@ -32,7 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Directory {
 
-  val SafeAttributeKeys = Seq("orcid", "affiliation", "department")
   val MaxUserAttributes = 128
   val MaxAttrKeyBytes = 128
   val MaxAttrValueBytes = 4096

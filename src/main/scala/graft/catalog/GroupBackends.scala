@@ -78,15 +78,6 @@ object GroupBackends {
       arr("account_key", "sas_token"))
       .otherwise(array().cast("array<string>"))
 
-  /** Identity keys in check order (`identity_keys` `:67-76`). */
-  def identityKeys(kind: Column): Column =
-    when(kind === "S3" || kind === "Gcs", arr("endpoint", "bucket", "root"))
-      .when(kind === "Azblob",
-        arr("endpoint", "container", "account_name", "root"))
-      .when(kind === "Azdls",
-        arr("endpoint", "filesystem", "account_name", "root"))
-      .otherwise(arr("bucket", "bucket_id", "root"))
-
   /** `requests(req_id, op, name, kind, ex_kind)` with op ∈ validate |
     * replace (replace runs check_identity against `existing`);
     * `reqPub(req_id, seq, k, v)`; `reqSec(req_id, seq, k, v)`;

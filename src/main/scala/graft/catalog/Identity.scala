@@ -48,7 +48,7 @@ object Identity {
     val allUsers = subjects.select(col("user_id"), col("realm")).distinct()
     // `lab` feeds four consumers (members, the subject roll-up, both alias
     // arms) — persist the small (user, realm, canonical) relation so the
-    // distinct + label join run once (released at the next entry drain)
+    // distinct + label join run once
     val lab = allUsers.join(labels, Seq("user_id"), "left_outer")
       .withColumn("canonical_id",
         coalesce(col("canonical_id"), col("user_id")))

@@ -42,7 +42,6 @@ import org.apache.spark.sql.functions._
   */
 object MirrorRepair {
 
-  val ReconcileGraceMs = 30000L
   val RepairBatchSize = 64
   val QueueRetryBaseMs = 250L
   val QueueRetryMaxMs = 30000L

@@ -89,8 +89,8 @@ object Dedup {
     val bf = refHashes.stat.bloomFilter("text_hash", expectedRefDocs, fpp)
     val bfB = reference.sparkSession.sparkContext.broadcast(bf)
     // the returned frame is lazy, so the broadcast cannot be destroyed
-    // here — register it for the next entry-point drain (round-2 session
-    // -leak discipline; a ~GB bloom leaked per invocation is driver OOM)
+    // here; the caller's release does (a ~GB bloom leaked per invocation
+    // is driver OOM)
     graft.Caches.track(bfB)
     val mightContain = udf((h: String) => h != null && bfB.value.mightContain(h))
     incoming.withColumn("text_hash", md5(col("text")))

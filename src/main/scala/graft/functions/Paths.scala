@@ -6,14 +6,6 @@ import org.apache.spark.sql.functions._
 /** Path predicates and listing clamps from the reference API layer. */
 object Paths {
 
-  /** Segment-aware prefix match (`api.rs:1874-1882`): `/a/b` matches prefix
-    * `/a` and `/a/b` but NOT `/a/bc`. */
-  def pathMatchesPrefix(path: Column, prefix: String): Column = {
-    val norm = normalize(prefix)
-    if (norm == "/") lit(true)
-    else path === norm || path.startsWith(norm + "/")
-  }
-
   def normalize(p: String): String = {
     val s = ("/" + p).replaceAll("/+", "/")
     if (s.length > 1 && s.endsWith("/")) s.dropRight(1) else s
@@ -29,8 +21,6 @@ object Paths {
       !key.exists(c => Character.isISOControl(c)) &&
       key.split("/", -1).forall(seg => seg != "..") &&
       key.split("/", -1).exists(seg => seg.nonEmpty && seg != ".")
-
-  val isConfinedUdf = udf((k: String) => k != null && isConfinedRelativePath(k))
 
   /** [[isConfinedRelativePath]] as a pure codegen'd Column (no UDF): the
     * object-key validation on a request-batch scan must stay inside

@@ -43,7 +43,7 @@ object Graphs {
       .distinct()
     val n = nodes.count()
     require(n > 0, "empty graph")
-    // re-read every round: cache once, release via the entry-point registry
+    // re-read every round: cache once, registered for the caller's release
     // (the round-2 session-leak discipline — see [[graft.Caches]])
     val withDeg = edges
       .join(edges.groupBy(col("src")).agg(count(lit(1)).as("out_deg")), "src")

@@ -29,15 +29,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("kind", StringType),
-    StructField("bytes", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("duration_ms", LongType))))))
-
   /** Derive a deterministic media table from `documents`: the text bytes act
     * as the opaque payload; kind cycles image/audio/video. */
   def media(spark: SparkSession, dir: String): DataFrame =

@@ -22,11 +22,9 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
 
-  /** documents ∪ planted exact copies ∪ planted near-copies. Entry point for
-    * every dedup gate, so it also drains the previous query's fixpoint /
-    * signature caches (same contract as the SPARQL entry points). */
+  /** documents ∪ planted exact copies ∪ planted near-copies: the input of
+    * every dedup gate. */
   def corpus(s: SparkSession, d: String): DataFrame = {
-    graft.Caches.release()
     // plain (un-fanned) scans: a fan-out pays one text exchange per union
     // arm (measured: dd14 +0.35 s), and a single fan-out above the union
     // ALSO measured worse (pl1 +0.18, dd14 +0.13 — the dedup pipelines
@@ -525,6 +523,7 @@ object PipelineQueries {
         col("vec_id") < Ann12MaxId)
       val exact = Ann.knnJoin(e, q, k = Ann4K)
         .select(col("q_id"), col("vec_id")).persist()
+      graft.Caches.track(exact)
       val exn = exact.groupBy("q_id").agg(count(lit(1)).as("n_exact"))
       val perProbe = Seq(1, 2, 4, 8, 16).map { np =>
         val ivf = Ann.knnJoinIvf(e, q, k = Ann4K, nCells = 16, nprobe = np)
@@ -709,7 +708,6 @@ object PipelineQueries {
     // fixed-iteration PageRank over a deterministic doc link graph
     // (doc i -> (31·i + j) mod n for j = 1..fanout)
     "gr1_pagerank" -> { (s, d) =>
-      graft.Caches.release()
       val docs = Tables.documents(s, d).select(col("doc_id"))
       val n = docs.count()
       val edges = docs.select(col("doc_id").as("src"),
@@ -722,7 +720,6 @@ object PipelineQueries {
 
     // per-node triangle counts over the undirected derived link graph
     "gr2_triangles" -> { (s, d) =>
-      graft.Caches.release()
       val docs = Tables.documents(s, d).select(col("doc_id"))
       val n = docs.count()
       val edges = docs.select(col("doc_id").as("src"),
@@ -735,7 +732,6 @@ object PipelineQueries {
     // rounds (only last round's discoveries expand), min-hop by
     // construction; nodes beyond the hop budget stay absent
     "gr3_bfs_hops" -> { (s, d) =>
-      graft.Caches.release()
       val docs = Tables.documents(s, d).select(col("doc_id"))
       val n = docs.count()
       val edges = docs.select(col("doc_id").as("src"),
@@ -749,7 +745,6 @@ object PipelineQueries {
     // bounded-hop weighted shortest paths (Bellman-Ford rounds) over the
     // derived link graph with deterministic integer weights
     "gr4_shortest_paths" -> { (s, d) =>
-      graft.Caches.release()
       val docs = Tables.documents(s, d).select(col("doc_id"))
       val n = docs.count()
       val edges = docs.select(col("doc_id").as("src"),
@@ -992,7 +987,7 @@ object PipelineQueries {
       // the filtered survivor set feeds THREE consumers (span hashing, the
       // rebuild join inside duplicatedSpans, the shard assignment); without
       // a barrier each re-evaluates the HOF-heavy rule scan — the sf10 30×
-      // finding. Cache once, released at the next entry-point drain.
+      // finding. Cache once; the caller releases it after the action.
       val kept = docs.join(
         TextAnalysis.gopherRules(docs, Tx20Stop, Tx20MinWords, Tx20MaxWords)
           .filter(col("keep")).select(col("doc_id")),

@@ -27,7 +27,6 @@ object Term {
   val XsdDateTime = "http://www.w3.org/2001/XMLSchema#dateTime"
 
   def iri(v: String): Term = Term(Kind.Iri, v, "", "")
-  def bnode(v: String): Term = Term(Kind.BNode, v, "", "")
   def lit(v: String): Term = Term(Kind.Literal, v, "", "")
   def langLit(v: String, lang: String): Term = Term(Kind.Literal, v, lang, "")
   def typedLit(v: String, dt: String): Term = Term(Kind.Literal, v, "", dt)

@@ -70,9 +70,8 @@ object Orphans {
     * the expensive part, and it feeds BOTH anti-joins — so it is barriered
     * into one cached RDD and evaluated once; without the barrier each
     * consumer re-runs the whole fixpoint (the round-2 or1 cost). The cache
-    * is registered with [[graft.Caches]] for release at the next query. */
+    * is registered with [[graft.Caches]], for the caller to release. */
   def filterOrphaned(quads: DataFrame, roots: DataFrame): DataFrame = {
-    graft.Caches.release()
     val orphDf = orphanedEntities(quads, roots)
     // internal-row lineage barrier (see graft.Caches.barrier — avoids the
     // external-Row decode/re-encode of the old df.rdd.cache() form)

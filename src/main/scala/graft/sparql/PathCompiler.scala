@@ -220,7 +220,7 @@ object PathCompiler {
     if (frontierRdd != null) frontierRdd.unpersist(blocking = false)
     // per-round counts already materialized accRdd, so base is releasable
     // NOW; the returned result's cache must outlive this call (the consumer
-    // has not run its action yet) — registered for the next entry drain.
+    // has not run its action yet), so the caller releases it.
     if (accRdd ne baseRdd) baseRdd.unpersist(blocking = false)
     graft.Caches.track(accRdd)
     acc

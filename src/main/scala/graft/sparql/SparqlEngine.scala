@@ -21,7 +21,6 @@ object SparqlEngine {
     * variable: lexical value, or the plain value for BIND/aggregates). */
   def select(quads: DataFrame, sparql: String, cap: Boolean = false,
       defaultGraph: Option[DataFrame] = None): DataFrame = {
-    graft.Caches.release() // previous query's fixpoint caches (see [[graft.Caches]])
     ExprCompiler.newQueryScope() // NOW()/BNODE() per-query constancy
     val q = SparqlParser.parse(sparql)
     require(q.form == "select", s"expected SELECT, got ${q.form}")
@@ -55,7 +54,6 @@ object SparqlEngine {
     * = any-true (`api.rs:2917-2921`). */
   def ask(quads: DataFrame, sparql: String,
       defaultGraph: Option[DataFrame] = None): DataFrame = {
-    graft.Caches.release()
     ExprCompiler.newQueryScope()
     val q = SparqlParser.parse(sparql)
     require(q.form == "ask", s"expected ASK, got ${q.form}")

@@ -22,7 +22,6 @@ import org.apache.spark.sql.functions._
 object Projector {
 
   val MaxClockSkewSecs = 300L // projector.rs:70
-  val RetryAfterSecs = 5L // projector.rs:57
 
   /** Strictly-greater comparison: threshold-equal events are accepted. */
   def exceedsClockSkew(occurredAtMs: Long, nowMs: Long): Boolean =

@@ -518,8 +518,8 @@ object StreamingQueries {
       // `creates` fans out into SEVEN consumers (registry, jobs, evRel, the
       // drain join, docsShaped→postings, nc, np) — without a persist each
       // one re-runs the events scan + the dedup shuffle (guide §5 "reused
-      // AND recomputing is more expensive"; released by the entry-point
-      // drain like every gate-local cache)
+      // AND recomputing is more expensive"; registered with graft.Caches
+      // like every gate-local cache)
       val creates = Projector.dedupEvents(applicable)
         .select(col("event_id"), col("event_type"), col("user_id"),
           col("occurred_at_ms"))

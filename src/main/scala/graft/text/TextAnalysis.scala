@@ -443,7 +443,7 @@ object TextAnalysis {
       .groupBy(i => winHash(snippets(i)._2, 0))
       .map { case (h, is) => (h, is.toArray) }
     val tableB = spark.sparkContext.broadcast((snippets, table))
-    graft.Caches.track(tableB) // released at the next entry-point drain
+    graft.Caches.track(tableB)
     import org.apache.spark.sql.Row
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(
       org.apache.spark.sql.types.StructType(Seq(

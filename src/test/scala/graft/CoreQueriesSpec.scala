@@ -8,6 +8,7 @@ class CoreQueriesSpec extends SparkSpec {
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sf0001)
       val n = df.count()
+      Caches.release()
       withClue(s"$name returned no rows: ") { assert(n > 0, name) }
     }
   }

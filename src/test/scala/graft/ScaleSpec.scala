@@ -102,18 +102,25 @@ class ScaleSpec extends SparkSpec {
 
   test("fixpoint caches release across queries: persistent-RDD set does not grow") {
     // or1 always barriers the orphan set (and may cache closure rounds);
-    // each query entry drains the previous query's registrations, so the
-    // persistent-RDD census must reach a steady state instead of growing
-    // per query (the round-2 session leak).
-    // the dedup gates persist derived relations (sigs/fingerprints/shingle
-    // streams) through the same registry — cycle them too
+    // the dedup and ann gates persist derived relations (sigs/fingerprints/
+    // shingle streams, exact neighbours) through the same registry. The
+    // caller releases after each action, as Bench, Verify and perfbench do,
+    // so each gate's release must restore the persistent-RDD set it found
+    // (the round-2 session leak is any RDD left behind). The census holds
+    // its RDDs weakly, so an unrelated unreferenced one may vanish mid-gate:
+    // the check is that nothing was added.
+    def ids: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     def run(name: String): Unit = {
+      val before = ids
       SparkEntry.queries(name)(spark, sf0001).count()
-      ()
+      Caches.release()
+      val left = ids -- before
+      assert(left.isEmpty, s"$name left persistent RDDs $left after its release")
     }
     val cycle = Seq("or1_orphan_filter", "sp17_path_plus",
       "dd2_minhash_lsh", "dd4_simhash", "dd6_lsh_verified", "dd8_dedup_components",
-      "gr1_pagerank", "gr2_triangles")
+      "gr1_pagerank", "gr2_triangles", "ann15_recall_curve")
+    Caches.release() // whatever earlier suites left on this thread
     cycle.foreach(run)
     val steady = spark.sparkContext.getPersistentRDDs.size
     (1 to 2).foreach { _ => cycle.foreach(run) }

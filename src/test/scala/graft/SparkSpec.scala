@@ -5,22 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites — one JVM-wide SparkSession. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      // rank-limit windows (heads, pages, queue probes) must rewrite to
-      // map-side WindowGroupLimits; the default threshold (1000) is below
-      // the 8192 queue-probe scan cap (QueueLag.PageSize*PageLimit)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16384")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4)
   val sf0001 = "/root/testdata/sf0.001"
 }
 
