@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 
 import scala.collection.mutable
@@ -9,7 +10,11 @@ import scala.collection.mutable
   * Bench's protocol), then once instrumented, and prints a per-stage table —
   * wall time, task count, executor run time, input/shuffle bytes — so the
   * expensive stage and its cost class (compute vs shuffle vs scheduling) are
-  * visible without the UI. Dev-only; never part of the driver contract.
+  * visible without the UI. The header line also counts the instrumented
+  * run's Spark jobs and generated-code compiles (the delta of Spark's
+  * `CodegenMetrics.METRIC_COMPILATION_TIME` count), so a warm gate that
+  * still compiles classes shows it. Dev-only; never part of the driver
+  * contract.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   *     java -cp ... graft.ProfileGate us3_subject_merge dd17_canonical_pick
@@ -25,10 +30,27 @@ object ProfileGate {
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val stages = mutable.LinkedHashMap[Int, St]()
-    var recording = false
+    // the instrumented run and the drain marker run in their own job groups;
+    // the listener keys stages by their job's group, so events it handles
+    // after the run ends still count
+    val Recorded = "profile-gate"
+    val Drain = "profile-gate-drain"
+    val recordedStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    var jobs = 0
+    var drained = new java.util.concurrent.CountDownLatch(1)
+    val drainJobs = mutable.Set[Int]()
+    def group(e: SparkListenerJobStart): String =
+      Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = group(e) match {
+        case Recorded => jobs += 1; e.stageIds.foreach(recordedStages.add)
+        case Drain => drainJobs += e.jobId
+        case _ =>
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (drainJobs.remove(e.jobId)) drained.countDown()
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        if (recording) {
+        if (recordedStages.contains(sc.stageInfo.stageId)) {
           val si = sc.stageInfo
           val st = St(si.name.takeWhile(_ != '\n'))
           st.wallMs = (for (a <- si.submissionTime; b <- si.completionTime)
@@ -48,14 +70,21 @@ object ProfileGate {
       val q = SparkEntry.queries(name)
       // two warm passes (Bench's steady-state protocol)
       (1 to 2).foreach { _ => q(spark, sfDir).count(); graft.Caches.release() }
-      stages.clear()
-      recording = true
+      stages.clear(); recordedStages.clear(); jobs = 0
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      spark.sparkContext.setJobGroup(Recorded, name, interruptOnCancel = false)
       val t0 = System.nanoTime()
-      val n = q(spark, sfDir).count()
+      val n = try q(spark, sfDir).count() finally spark.sparkContext.clearJobGroup()
       val dt = (System.nanoTime() - t0) / 1e9
-      recording = false
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       graft.Caches.release()
-      println(f"===== $name%s rows=$n%d wall=$dt%.3f s  stages=${stages.size}%d =====")
+      // wait until the listener has handled every event of the run
+      drained = new java.util.concurrent.CountDownLatch(1)
+      spark.sparkContext.setJobGroup(Drain, "drain", interruptOnCancel = false)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      drained.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      println(f"===== $name%s rows=$n%d wall=$dt%.3f s  jobs=$jobs%d  stages=${stages.size}%d  compiles=$compiles%d =====")
       println(f"${"stageId"}%8s ${"wallMs"}%7s ${"tasks"}%5s ${"runMs"}%7s ${"cpuMs"}%7s ${"inMB"}%8s ${"shRdMB"}%8s ${"shWrMB"}%8s  name")
       val byId = stages.toSeq.sortBy(_._1)
       for ((id, s) <- byId)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import scala.jdk.CollectionConverters._
+
 /** Readers for the driver-provided parquet tables (TESTDATA.md) plus the
   * aruna-shaped derived tables (FIXTURES.md §1) that the engine operators
   * consume: `quads`, `registry`, `objects`, `blobs`, `buckets`.
@@ -49,26 +51,32 @@ object Tables {
   private[graft] def fanOut(spark: SparkSession, path: String,
       df: DataFrame, key: String): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
-    // Sum REGULAR file sizes (recursively): a directory-layout parquet
-    // table (standard Spark write output) must measure its data files, not
-    // the directory inode (~4 KB), or every large table would classify as
-    // "unsplittable-small" and eat a cluster-wide repartition — the exact
-    // opposite of the documented identity-at-scale guarantee (r14 ADVICE
-    // fix). Unknown/missing paths default to "large" (no fan-out), and only
-    // non-fatal errors are swallowed.
-    val bytes =
-      try {
-        val p = java.nio.file.Paths.get(path)
-        if (java.nio.file.Files.isDirectory(p)) {
-          val s = java.nio.file.Files.walk(p)
-          try s.filter(java.nio.file.Files.isRegularFile(_))
-            .mapToLong(java.nio.file.Files.size(_)).sum()
-          finally s.close()
-        } else java.nio.file.Files.size(p)
-      } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-    if (bytes < par * FanOutBytesPerCore) df.repartition(par, col(key))
+    if (dataBytes(path) < par * FanOutBytesPerCore) df.repartition(par, col(key))
     else df
   }
+
+  /** Bytes of a table's data files: a file's size, or for a directory-layout
+    * table (standard Spark write output) the sum over its regular files,
+    * recursively, not the directory inode (~4 KB) — or every large table
+    * would classify as "unsplittable-small" and eat a cluster-wide
+    * repartition (r14 ADVICE fix). Like Spark's own file listing it skips
+    * every path under the table whose name starts with `_` or `.`
+    * (`_SUCCESS`, `.crc` checksums, `_temporary`). Unknown or missing paths
+    * read as `Long.MaxValue` ("large", no fan-out); only non-fatal errors
+    * are swallowed. */
+  private[graft] def dataBytes(path: String): Long =
+    try {
+      val p = java.nio.file.Paths.get(path)
+      def hidden(f: java.nio.file.Path): Boolean =
+        p.relativize(f).iterator().asScala.map(_.toString)
+          .exists(n => n.startsWith("_") || n.startsWith("."))
+      if (java.nio.file.Files.isDirectory(p)) {
+        val s = java.nio.file.Files.walk(p)
+        try s.filter(f => java.nio.file.Files.isRegularFile(f) && !hidden(f))
+          .mapToLong(java.nio.file.Files.size(_)).sum()
+        finally s.close()
+      } else java.nio.file.Files.size(p)
+    } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")

@@ -93,9 +93,8 @@ final case class PPath(s: TermPattern, path: PathExpr, o: TermPattern) extends P
   * its projected solutions join with the enclosing group. */
 final case class PSub(q: SparqlQuery) extends Pattern
 
-/** Property-path expressions: iri, ^p, p/q, p|q, p+, p?, !(…) (`*` is `+`
-  * with reflexive closure over path endpoints; `{n,m}` quantifiers desugar
-  * to seq/alternation at parse time). */
+/** Property-path expressions: iri, ^p, p/q, p|q, p+, p?, p{n,m}, !(…) (`*`
+  * is `+` with reflexive closure over path endpoints). */
 sealed trait PathExpr
 final case class PLink(iri: String) extends PathExpr
 
@@ -110,6 +109,12 @@ final case class PAlt(l: PathExpr, r: PathExpr) extends PathExpr
 final case class POneOrMore(p: PathExpr) extends PathExpr
 final case class PZeroOrMore(p: PathExpr) extends PathExpr
 final case class PZeroOrOne(p: PathExpr) extends PathExpr
+
+/** Finite quantifier `p{min,max}` (0 <= min <= max, max >= 1): matches (s,o)
+  * when some walk of k `p`-hops leads from s to o, for k in min..max. The
+  * zero-length match (min = 0) holds for a node in the node domain of `p`,
+  * the same narrowing as `*` and `?`. */
+final case class PRange(p: PathExpr, min: Int, max: Int) extends PathExpr
 
 final case class OrderKey(expr: Expr, asc: Boolean)
 

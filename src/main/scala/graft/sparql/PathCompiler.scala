@@ -19,6 +19,10 @@ import org.apache.spark.sql.functions._
   *    capped to bound adversarial cycles.
   *  - `p*`/`p?` add reflexive pairs over the path's own node domain (SPARQL's
   *    zero-length path over all graph terms, narrowed to connected nodes).
+  *  - `p{n,m}`: a bounded level search ([[levels]]). Level k holds the
+  *    positions a walk of exactly k hops reaches, and the result is the
+  *    union of levels n..m; small inputs search on the driver, larger ones
+  *    run at most m distributed rounds.
   */
 object PathCompiler {
 
@@ -47,9 +51,11 @@ object PathCompiler {
   /** Compile a path to an edge DF with encoded string columns (s, o).
     * `dflt` is a pre-deduped default-graph triples table ([[graft.Store]]):
     * when present, default-graph link scans read it directly and skip the
-    * per-link set-dedup shuffle. */
+    * per-link set-dedup shuffle. `localMaxEdges` caps the driver-side
+    * searches (see [[closure]]); 0 forces their distributed loops. */
   def edges(quads: DataFrame, path: PathExpr,
-      graph: Option[TermPattern], dflt: Option[DataFrame] = None): DataFrame = path match {
+      graph: Option[TermPattern], dflt: Option[DataFrame] = None,
+      localMaxEdges: Long = LocalClosureMaxEdges): DataFrame = path match {
     case PLink(iri) =>
       val deduped = graph.isEmpty && dflt.isDefined
       var df = (if (deduped) dflt.get else quads).filter(col("predicate") === iri)
@@ -83,22 +89,27 @@ object PathCompiler {
           (if (inv.nonEmpty) Seq(branch(inv, swap = true)) else Nil)
       parts.reduce(_ union _).dropDuplicates()
     case PInverse(p) =>
-      edges(quads, p, graph, dflt).select(col("o").as("s"), col("s").as("o"))
+      edges(quads, p, graph, dflt, localMaxEdges).select(col("o").as("s"), col("s").as("o"))
     case PSeq(l, r) =>
-      val a = edges(quads, l, graph, dflt).select(col("s"), col("o").as("m"))
-      val b = edges(quads, r, graph, dflt).select(col("s").as("m2"), col("o"))
+      val a = edges(quads, l, graph, dflt, localMaxEdges).select(col("s"), col("o").as("m"))
+      val b = edges(quads, r, graph, dflt, localMaxEdges).select(col("s").as("m2"), col("o"))
       a.join(b, a("m") === b("m2")).select(col("s"), col("o")).dropDuplicates()
     case PAlt(l, r) =>
-      edges(quads, l, graph, dflt).toDF("s", "o")
-        .union(edges(quads, r, graph, dflt).toDF("s", "o")).dropDuplicates()
-    case POneOrMore(p) => closure(edges(quads, p, graph, dflt))
+      edges(quads, l, graph, dflt, localMaxEdges).toDF("s", "o")
+        .union(edges(quads, r, graph, dflt, localMaxEdges).toDF("s", "o")).dropDuplicates()
+    case POneOrMore(p) =>
+      closure(edges(quads, p, graph, dflt, localMaxEdges), localMaxEdges = localMaxEdges)
     case PZeroOrMore(p) =>
-      val base = edges(quads, p, graph, dflt)
-      closure(base).toDF("s", "o")
+      val base = edges(quads, p, graph, dflt, localMaxEdges)
+      closure(base, localMaxEdges = localMaxEdges).toDF("s", "o")
         .union(reflexive(base).toDF("s", "o")).dropDuplicates()
     case PZeroOrOne(p) =>
-      val base = edges(quads, p, graph, dflt)
+      val base = edges(quads, p, graph, dflt, localMaxEdges)
       base.toDF("s", "o").union(reflexive(base).toDF("s", "o")).dropDuplicates()
+    case PRange(p, min, max) =>
+      // var-var: the search starts from every node of the domain
+      levels(edges(quads, p, graph, dflt, localMaxEdges), None, min, max, localMaxEdges)
+        .toDF("s", "o")
   }
 
   /** zero-length pairs over the path's node domain. */
@@ -240,6 +251,7 @@ object PathCompiler {
     case POneOrMore(q) => POneOrMore(reverse(q))
     case PZeroOrMore(q) => PZeroOrMore(reverse(q))
     case PZeroOrOne(q) => PZeroOrOne(reverse(q))
+    case PRange(q, min, max) => PRange(reverse(q), min, max)
   }
 
   /** node domain of an edge set (for zero-length path membership). */
@@ -257,25 +269,152 @@ object PathCompiler {
     * difference between one seed's neighborhood and Θ(V·E) at 100 TB. */
   private def evalFrom(quads: DataFrame, path: PathExpr,
       graph: Option[TermPattern], cur: DataFrame,
-      dflt: Option[DataFrame]): DataFrame = path match {
+      dflt: Option[DataFrame], localMaxEdges: Long): DataFrame = path match {
     case PSeq(l, r) =>
-      evalFrom(quads, r, graph, evalFrom(quads, l, graph, cur, dflt), dflt)
+      evalFrom(quads, r, graph, evalFrom(quads, l, graph, cur, dflt, localMaxEdges), dflt,
+        localMaxEdges)
     case PAlt(l, r) =>
-      evalFrom(quads, l, graph, cur, dflt).union(evalFrom(quads, r, graph, cur, dflt))
+      evalFrom(quads, l, graph, cur, dflt, localMaxEdges)
+        .union(evalFrom(quads, r, graph, cur, dflt, localMaxEdges))
         .dropDuplicates()
-    case POneOrMore(p) => seededClosure(edges(quads, p, graph, dflt), cur)
+    case POneOrMore(p) => seededClosure(edges(quads, p, graph, dflt, localMaxEdges), cur)
     case PZeroOrMore(p) =>
-      val base = edges(quads, p, graph, dflt)
+      val base = edges(quads, p, graph, dflt, localMaxEdges)
       cur.join(nodes(base), Seq("n"), "left_semi") // zero-length: n in the domain
         .select(col("seed"), col("n")) // using-join put the key first; realign
         .union(seededClosure(base, cur)).dropDuplicates()
     case PZeroOrOne(p) =>
-      val base = edges(quads, p, graph, dflt)
+      val base = edges(quads, p, graph, dflt, localMaxEdges)
       cur.join(nodes(base), Seq("n"), "left_semi")
         .select(col("seed"), col("n"))
         .union(step(cur, base)).dropDuplicates()
-    case leaf => step(cur, edges(quads, leaf, graph, dflt))
+    case PRange(p, min, max) =>
+      levels(edges(quads, p, graph, dflt, localMaxEdges), Some(cur), min, max, localMaxEdges)
+    case leaf => step(cur, edges(quads, leaf, graph, dflt, localMaxEdges))
   }
+
+  /** Bounded level search for `p{min,max}` over the edge set `base0`:
+    * (seed, n) positions that a walk of k hops leads to from a start
+    * position, for some k in min..max. Level k is the FULL set of k-hop
+    * positions, not the novel ones: a node an earlier level reached counts
+    * again when a longer walk in range reaches it (cycles included). Level 0
+    * counts only for a start inside the node domain of `base0`, the
+    * zero-length convention of `*` and `?`. `cur` holds the start positions;
+    * None starts from every domain node n as (n, n) — the var-var form.
+    *
+    * When both inputs are small the search runs on the driver: each is
+    * collected once under `limit(bound + 1)` (`localMaxEdges` for the
+    * edges, [[LocalClosureMaxPairs]] for the positions) and deduped there. A hit limit, or more than [[LocalClosureMaxPairs]] positions
+    * held across all levels, falls back to a distributed loop of at most
+    * `max` rounds, each round one barriered step. */
+  private def levels(base0: DataFrame, cur: Option[DataFrame], min: Int, max: Int,
+      localMaxEdges: Long): DataFrame = {
+    val spark = base0.sparkSession
+    import spark.implicits._
+    def pairs(df: DataFrame, a: String, b: String, bound: Long): Option[Array[(String, String)]] = {
+      val rows = df.select(col(a), col(b)).limit((bound + 1).toInt).collect()
+      if (rows.length > bound) None else Some(rows.map(r => (r.getString(0), r.getString(1))))
+    }
+    val local = for {
+      e <- pairs(base0, "s", "o", localMaxEdges)
+      c <- cur match {
+        case Some(df) => pairs(df, "seed", "n", LocalClosureMaxPairs).map(Some(_))
+        case None => Some(None)
+      }
+      out <- localLevels(e, c, min, max)
+    } yield out
+    local match {
+      case Some(out) => out.toDF("seed", "n")
+      case None => distributedLevels(base0, cur, min, max)
+    }
+  }
+
+  /** [[levels]] on the driver over interned node ids; None once more than
+    * [[LocalClosureMaxPairs]] positions are held across all levels. */
+  private def localLevels(edges: Array[(String, String)],
+      starts: Option[Array[(String, String)]], min: Int, max: Int)
+      : Option[Seq[(String, String)]] = {
+    val ids = scala.collection.mutable.HashMap[String, Int]()
+    val es = edges.distinct.map { case (s, o) =>
+      (ids.getOrElseUpdate(s, ids.size), ids.getOrElseUpdate(o, ids.size)) }
+    val names = new Array[String](ids.size)
+    ids.foreach { case (n, i) => names(i) = n }
+    val adj = es.groupMap(_._1)(_._2)
+    // a start outside the domain has no successor and no zero-length match
+    val seeds: Iterable[(String, Array[Int])] = starts match {
+      case Some(cs) => cs.groupMap(_._1)(_._2).map { case (seed, ns) =>
+        (seed, ns.distinct.flatMap(ids.get)) }
+      case None => names.indices.map(i => (names(i), Array(i)))
+    }
+    // stamps instead of per-level sets: a node is in the level being built
+    // when levelMark(n) == round, and already emitted for a seed when
+    // emitted(n) == that seed's index
+    val levelMark = Array.fill(names.length)(-1)
+    val emitted = Array.fill(names.length)(-1)
+    val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    var held = 0L
+    var round = 0
+    for (((seed, start), si) <- seeds.zipWithIndex) {
+      def emit(level: Array[Int]): Unit = level.foreach { n =>
+        if (emitted(n) != si) { emitted(n) = si; out += ((seed, names(n))) }
+      }
+      var level = start
+      held += level.length
+      if (min == 0) emit(level)
+      var k = 0
+      while (k < max && level.nonEmpty) {
+        round += 1
+        val next = scala.collection.mutable.ArrayBuffer[Int]()
+        level.foreach(n => adj.getOrElse(n, Array.empty[Int]).foreach { m =>
+          if (levelMark(m) != round) { levelMark(m) = round; next += m }
+        })
+        level = next.toArray
+        k += 1
+        held += level.length
+        if (held > LocalClosureMaxPairs) return None
+        if (k >= min) emit(level)
+      }
+    }
+    Some(out.toSeq)
+  }
+
+  /** [[levels]] as at most `max` distributed rounds: round k steps level
+    * k-1 over the barriered edge set into a barrier of its own. The levels
+    * in range stay cached for the returned frame and are registered with
+    * [[graft.Caches]]; the others are released as soon as the next level
+    * is materialized. */
+  private def distributedLevels(base0: DataFrame, cur: Option[DataFrame],
+      min: Int, max: Int): DataFrame = {
+    val (base, baseRdd) = barrier(base0.dropDuplicates())
+    val start = cur.getOrElse(nodes(base).select(col("n").as("seed"), col("n")))
+    val kept = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    if (min == 0)
+      kept += start.join(nodes(base), Seq("n"), "left_semi").select(col("seed"), col("n"))
+    var level = start
+    var levelRdd: org.apache.spark.rdd.RDD[_] = null
+    var size = Long.MaxValue // unknown for the start positions
+    var k = 0
+    while (k < max && size > 0) {
+      val (next, nextRdd) = barrier(step(maybeBroadcast(level, size), base))
+      size = next.count()
+      if (levelRdd != null && k < min) levelRdd.unpersist(blocking = false)
+      k += 1
+      level = next
+      levelRdd = nextRdd
+      if (k >= min) { kept += next; graft.Caches.track(nextRdd) }
+    }
+    if (k < min && levelRdd != null) levelRdd.unpersist(blocking = false)
+    // level 0 reads the edge set lazily; no other kept level does
+    if (min == 0) graft.Caches.track(baseRdd) else baseRdd.unpersist(blocking = false)
+    kept.reduceOption(_ union _).getOrElse(start.filter(lit(false)))
+      .dropDuplicates()
+  }
+
+  /** Broadcast a frontier while its exact count (known from the previous
+    * round's barrier) stays under [[BfsBroadcastMaxRows]]: both sides of a
+    * round's join are LogicalRDD barriers whose size Catalyst cannot see. */
+  private def maybeBroadcast(df: DataFrame, exactRows: Long): DataFrame =
+    if (exactRows <= BfsBroadcastMaxRows) broadcast(df) else df
 
   /** Seeded transitive reachability: (seed, n) pairs reachable in >= 1 step.
     *
@@ -298,13 +437,9 @@ object PathCompiler {
       return out
     }
     // per-round joins: the frontier is usually orders of magnitude smaller
-    // than the edge relation, and both sides are LogicalRDD barriers whose
-    // stats Catalyst cannot see — without a hint every round pays a full
-    // sort-merge of the edge set. Broadcast the frontier while its exact
-    // count (known from the previous round's barrier) stays under the
-    // threshold; past it the plain shuffle join is the correct plan.
-    def maybeBroadcast(df: DataFrame, exactRows: Long): DataFrame =
-      if (exactRows <= BfsBroadcastMaxRows) broadcast(df) else df
+    // than the edge relation — without a hint every round pays a full
+    // sort-merge of the edge set; past the threshold the plain shuffle join
+    // is the correct plan.
     var (visited, visitedRdd) = barrier(step(seeds, base))
     var frontier = visited
     var frontierRdd = visitedRdd
@@ -349,7 +484,8 @@ object PathCompiler {
     * scan to graphs containing the constant (broadcast semi-join) before
     * any fixpoint, bounding closure work to the graphs that can match. */
   def compileGraphVar(quads: DataFrame, s: TermPattern, path: PathExpr,
-      o: TermPattern, gvar: String): DataFrame = {
+      o: TermPattern, gvar: String,
+      localMaxEdges: Long = LocalClosureMaxEdges): DataFrame = {
     val (vs, vo) = (s, o) match {
       case (TVar(a), TVar(b)) => (a, b)
       case (TVar(a), _) => (a, "__path_o")
@@ -373,7 +509,7 @@ object PathCompiler {
       .withColumn("subject", concat_ws(GSep, col("graph_iri"), col("subject")))
       .withColumn("obj_value", concat_ws(GSep, col("graph_iri"), col("obj_value")))
     val sameVar = vs == vo
-    val raw = compile(composite, TVar(vs), path, TVar(vo), None, None)
+    val raw = compile(composite, TVar(vs), path, TVar(vo), None, None, localMaxEdges)
     def termStruct(t: Term) = struct(lit(t.kind).as("kind"), lit(t.value).as("value"),
       lit(t.lang).as("lang"), lit(t.datatype).as("datatype"))
     def strip(c: Column) = struct(c.getField("kind").as("kind"),
@@ -408,24 +544,26 @@ object PathCompiler {
 
   /** Bind a compiled path into a solution DataFrame for (s, path, o).
     * Constant endpoints evaluate seeded (frontier-only closures); the
-    * var-var case needs the full path relation. */
+    * var-var case needs the full path relation. `localMaxEdges` is as in
+    * [[edges]]. */
   def compile(quads: DataFrame, s: TermPattern, path: PathExpr, o: TermPattern,
-      graph: Option[TermPattern], dflt: Option[DataFrame] = None): DataFrame = (s, o) match {
+      graph: Option[TermPattern], dflt: Option[DataFrame] = None,
+      localMaxEdges: Long = LocalClosureMaxEdges): DataFrame = (s, o) match {
     case (TVar(vs), TVar(vo)) if vs == vo =>
-      val e = edges(quads, path, graph, dflt)
+      val e = edges(quads, path, graph, dflt, localMaxEdges)
       e.filter(col("s") === col("o")).select(decode(col("s")).as(vs))
     case (TVar(vs), TVar(vo)) =>
-      val e = edges(quads, path, graph, dflt)
+      val e = edges(quads, path, graph, dflt, localMaxEdges)
       e.select(decode(col("s")).as(vs), decode(col("o")).as(vo))
     case (TConst(ts), TVar(vo)) =>
-      evalFrom(quads, path, graph, seedDf(quads, ts), dflt)
+      evalFrom(quads, path, graph, seedDf(quads, ts), dflt, localMaxEdges)
         .select(decode(col("n")).as(vo))
     case (TVar(vs), TConst(to)) =>
-      evalFrom(quads, reverse(path), graph, seedDf(quads, to), dflt)
+      evalFrom(quads, reverse(path), graph, seedDf(quads, to), dflt, localMaxEdges)
         .select(decode(col("n")).as(vs))
     case (TConst(ts), TConst(to)) =>
       // boolean existence: empty or single-row unit solution
-      evalFrom(quads, path, graph, seedDf(quads, ts), dflt)
+      evalFrom(quads, path, graph, seedDf(quads, ts), dflt, localMaxEdges)
         .filter(col("n") === encTerm(to))
         .limit(1).select(lit(1).as("__unit"))
   }

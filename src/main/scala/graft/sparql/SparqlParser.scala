@@ -460,10 +460,7 @@ private final class SparqlParser(input: String) {
   /** Property-path grammar:
     * Path := Seq ('|' Seq)* ; Seq := Elt ('/' Elt)* ;
     * Elt := Primary ('+'|'*'|'?'|'{n}'|'{n,}'|'{n,m}')? ;
-    * Primary := 'a' | iri | '^'Primary | '!'NPS | '('Path')'.
-    * `{n,m}` quantifiers desugar to p^n / (p?)^(m-n) — exact as a relation
-    * under set semantics (the zero-length arm of `?` is narrowed to the
-    * path's node domain, matching the engine's `*`/`?` convention). */
+    * Primary := 'a' | iri | '^'Primary | '!'NPS | '('Path')'. */
   private def parsePath(): PathExpr = {
     var p = parsePathSeq()
     while (eatPunct("|")) p = PAlt(p, parsePathSeq())
@@ -485,8 +482,9 @@ private final class SparqlParser(input: String) {
     else prim
   }
 
-  /** `p{n}` / `p{n,}` / `p{n,m}` — desugared: n chained copies, then either
-    * a `p*` tail (unbounded) or m-n chained `p?` (each adds 0 or 1 hop). */
+  /** `p{n}` / `p{n,}` / `p{n,m}`. A finite range is one [[PRange]] node,
+    * which the path compiler evaluates as a bounded level search; `{n,}` is
+    * `p{n}` followed by `p*`, and `{0,}` is `p*`. */
   private def parsePathRange(p: PathExpr): PathExpr = {
     def nat(): Int = advance() match {
       case TNum(v) if v.forall(_.isDigit) => v.toInt
@@ -498,14 +496,10 @@ private final class SparqlParser(input: String) {
     expectPunct("}")
     if (max.exists(_ < min) || max.contains(0))
       throw new SparqlParseException(s"invalid path quantifier {$min,${max.getOrElse("")}}")
-    def pow(k: Int): PathExpr = (1 until k).foldLeft(p)((acc, _) => PSeq(acc, p))
     (min, max) match {
       case (0, None) => PZeroOrMore(p)
-      case (n, None) => PSeq(pow(n), PZeroOrMore(p))
-      case (0, Some(m)) => (1 until m).foldLeft(PZeroOrOne(p): PathExpr)((acc, _) =>
-        PSeq(acc, PZeroOrOne(p)))
-      case (n, Some(m)) =>
-        (n until m).foldLeft(pow(n))((acc, _) => PSeq(acc, PZeroOrOne(p)))
+      case (n, None) => PSeq(PRange(p, n, n), PZeroOrMore(p))
+      case (n, Some(m)) => PRange(p, n, m)
     }
   }
 
