@@ -5,8 +5,8 @@ import org.apache.spark.sql.DataFrame
 
 /** Release registry for the caches a query leaves behind.
   *
-  * Fixpoint operators ([[graft.sparql.PathCompiler]] closures, the orphan
-  * reachability filter) and the dedup operators cache barriers, derived
+  * Iterative operators ([[graft.sparql.PathCompiler]] level searches, the
+  * orphan reachability filter) and the dedup operators cache barriers, derived
   * relations and broadcasts that the returned DataFrame still reads. The
   * frame is lazy, so the operator cannot release them itself; it registers
   * them here instead.

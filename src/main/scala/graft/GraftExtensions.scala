@@ -46,8 +46,8 @@ object GraftExtensions extends GraftExtensions
   * The traversal is gated on the HIGH_ORDER_FUNCTION tree-pattern bit, so
   * for the vast majority of plans (every SPARQL/path/FTS plan — no HOFs)
   * the rule is a single cached-bitset test per optimizer fixpoint
-  * iteration, not a tree walk. This matters because seeded-closure path
-  * queries re-plan per expansion round and would otherwise multiply any
+  * iteration, not a tree walk. This matters because a distributed path
+  * search re-plans once per level and would otherwise multiply any
   * per-plan traversal cost. */
 object RewriteHofDot extends Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.trees.TreePattern

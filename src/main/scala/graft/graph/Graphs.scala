@@ -110,8 +110,8 @@ object Graphs {
   /** Edge sets at or below this row count run [[bfsHops]]/[[shortestPaths]]
     * on the driver (interned-index BFS / Bellman–Ford) instead of the
     * d-round dataflow — the [[graft.dedup.Dedup.LocalComponentsMaxEdges]] /
-    * PathCompiler.localClosure device: each distributed round costs 2-4
-    * Spark jobs of pure scheduling overhead, versus microseconds of array
+    * `PathCompiler.levels` device: each distributed round costs 2-4 Spark
+    * jobs of pure scheduling overhead, versus microseconds of array
     * walking. Output is bounded by the node count ≤ 2·edges. Larger sets
     * (and non-long/int/string keys or null endpoints) keep the dataflow
     * rounds, which is the shape that scales to 100 TB. */
@@ -135,10 +135,14 @@ object Graphs {
     // actually small does the second pass collect the rows the local
     // algorithm needs; the ≤2M-row double computation that costs is bench-
     // scale cheap, while the fallback probe is now bounded executor work.
-    if (edges.limit(LocalGraphMaxEdges.toInt + 1).count() > LocalGraphMaxEdges)
-      return None
-    val eRows = edges.collect()
-    val sRows = seeds.collect()
+    // The collects carry the same limit: the probe and the collect are two
+    // evaluations, and a lineage that grew between them, or a seed set past
+    // the bound, goes to the dataflow instead of the driver's heap.
+    val bound = LocalGraphMaxEdges.toInt + 1
+    if (edges.limit(bound).count() > LocalGraphMaxEdges) return None
+    val eRows = edges.limit(bound).collect()
+    val sRows = seeds.limit(bound).collect()
+    if (eRows.length > LocalGraphMaxEdges || sRows.length > LocalGraphMaxEdges) return None
     val ids = new java.util.HashMap[Any, Integer]()
     val vals = new scala.collection.mutable.ArrayBuffer[Any]()
     def intern(v: Any): Int = {

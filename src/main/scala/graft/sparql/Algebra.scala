@@ -93,8 +93,8 @@ final case class PPath(s: TermPattern, path: PathExpr, o: TermPattern) extends P
   * its projected solutions join with the enclosing group. */
 final case class PSub(q: SparqlQuery) extends Pattern
 
-/** Property-path expressions: iri, ^p, p/q, p|q, p+, p?, p{n,m}, !(…) (`*`
-  * is `+` with reflexive closure over path endpoints). */
+/** Property-path expressions: iri, ^p, p/q, p|q, !(…) and one quantifier
+  * node, [[PRange]], for `p+`, `p*`, `p?`, `p{n}`, `p{n,}` and `p{n,m}`. */
 sealed trait PathExpr
 final case class PLink(iri: String) extends PathExpr
 
@@ -106,15 +106,14 @@ final case class PNps(forward: Seq[String], inverse: Seq[String]) extends PathEx
 final case class PInverse(p: PathExpr) extends PathExpr
 final case class PSeq(l: PathExpr, r: PathExpr) extends PathExpr
 final case class PAlt(l: PathExpr, r: PathExpr) extends PathExpr
-final case class POneOrMore(p: PathExpr) extends PathExpr
-final case class PZeroOrMore(p: PathExpr) extends PathExpr
-final case class PZeroOrOne(p: PathExpr) extends PathExpr
 
-/** Finite quantifier `p{min,max}` (0 <= min <= max, max >= 1): matches (s,o)
-  * when some walk of k `p`-hops leads from s to o, for k in min..max. The
+/** Quantifier `p{min,max}` (0 <= min, and min <= max, max >= 1 when `max`
+  * is set; None is unbounded): matches (s,o) when some walk of k `p`-hops
+  * leads from s to o, for k in min..max. `p+` is `PRange(p, 1, None)`, `p*`
+  * is `PRange(p, 0, None)` and `p?` is `PRange(p, 0, Some(1))`. The
   * zero-length match (min = 0) holds for a node in the node domain of `p`,
-  * the same narrowing as `*` and `?`. */
-final case class PRange(p: PathExpr, min: Int, max: Int) extends PathExpr
+  * not for every term of the graph. */
+final case class PRange(p: PathExpr, min: Int, max: Option[Int]) extends PathExpr
 
 final case class OrderKey(expr: Expr, asc: Boolean)
 

@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   * dropped wholesale, matching the diagnostic set the reference consumes.
   *
   * Scale: edges are restricted to entity→entity references (a semi-join
-  * against the subject set) before the fixpoint, and the BFS runs seeded
-  * from the roots via [[PathCompiler.seededClosure]] — per-round work is
-  * O(reachable), keyed by (graph, node), never a global closure.
+  * against the subject set) before the search, and the search runs seeded
+  * from the roots as the path compiler's `+` ([[PathCompiler.levels]] with
+  * no upper bound) — per-round work is O(reachable), keyed by (graph,
+  * node), never a global closure.
   */
 object Orphans {
 
@@ -53,7 +54,8 @@ object Orphans {
     val seeds = roots
       .select(key(col("graph_iri"), col("root")).as("seed"))
       .withColumn("n", col("seed"))
-    val reachable = PathCompiler.seededClosure(edges, seeds)
+    val reachable = PathCompiler.levels(edges, Some(seeds), 1, None,
+        PathCompiler.LocalClosureMaxEdges)
       .select(col("n"))
       .union(seeds.select(col("n"))) // the root itself
       .distinct()
@@ -66,10 +68,10 @@ object Orphans {
   /** Quads minus every row touching an orphaned entity (subject or IRI
     * object), per `handle.rs:4969-4971`.
     *
-    * The orphan set's lineage (seeded reachability fixpoint + anti-join) is
+    * The orphan set's lineage (seeded reachability search + anti-join) is
     * the expensive part, and it feeds BOTH anti-joins — so it is barriered
     * into one cached RDD and evaluated once; without the barrier each
-    * consumer re-runs the whole fixpoint (the round-2 or1 cost). The cache
+    * consumer re-runs the whole search (the round-2 or1 cost). The cache
     * is registered with [[graft.Caches]], for the caller to release. */
   def filterOrphaned(quads: DataFrame, roots: DataFrame): DataFrame = {
     val orphDf = orphanedEntities(quads, roots)

@@ -475,16 +475,16 @@ private final class SparqlParser(input: String) {
 
   private def parsePathElt(): PathExpr = {
     val prim = parsePathPrimary()
-    if (eatPunct("+")) POneOrMore(prim)
-    else if (eatPunct("*")) PZeroOrMore(prim)
-    else if (eatPunct("?")) PZeroOrOne(prim)
+    if (eatPunct("+")) PRange(prim, 1, None)
+    else if (eatPunct("*")) PRange(prim, 0, None)
+    else if (eatPunct("?")) PRange(prim, 0, Some(1))
     else if (eatPunct("{")) parsePathRange(prim)
     else prim
   }
 
-  /** `p{n}` / `p{n,}` / `p{n,m}`. A finite range is one [[PRange]] node,
-    * which the path compiler evaluates as a bounded level search; `{n,}` is
-    * `p{n}` followed by `p*`, and `{0,}` is `p*`. */
+  /** `p{n}` / `p{n,}` / `p{n,m}`: one [[PRange]] node, which the path
+    * compiler evaluates as a level search; `{n,}` has no upper bound, so
+    * `{0,}` is the same node as `p*`. */
   private def parsePathRange(p: PathExpr): PathExpr = {
     def nat(): Int = advance() match {
       case TNum(v) if v.forall(_.isDigit) => v.toInt
@@ -496,11 +496,7 @@ private final class SparqlParser(input: String) {
     expectPunct("}")
     if (max.exists(_ < min) || max.contains(0))
       throw new SparqlParseException(s"invalid path quantifier {$min,${max.getOrElse("")}}")
-    (min, max) match {
-      case (0, None) => PZeroOrMore(p)
-      case (n, None) => PSeq(PRange(p, n, n), PZeroOrMore(p))
-      case (n, Some(m)) => PRange(p, n, m)
-    }
+    PRange(p, min, max)
   }
 
   private def parsePathPrimary(): PathExpr = {

@@ -116,8 +116,8 @@ object SparqlQueries {
     "sp19_path_alt_inv" -> run(
       "SELECT ?x WHERE { ?x schema:knows|^schema:knows <person:5> } ORDER BY ?x") _,
 
-    // seeded evaluation through a sequence: the closure fixpoint starts from
-    // the single author node, never computing the global knows+ closure
+    // seeded evaluation through a sequence: the knows+ level search starts
+    // from the single author node, never computing the global knows+ closure
     "sp20_path_seeded_seq" -> run(
       "SELECT ?x WHERE { <doc:6> schema:author/schema:knows+ ?x } ORDER BY ?x") _,
 

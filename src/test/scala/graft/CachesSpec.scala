@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.{Callable, Executors, TimeUnit}
 
+import org.apache.spark.sql.DataFrame
+
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
@@ -24,18 +26,38 @@ class CachesSpec extends SparkSpec {
 
   private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** sp17's `knows+` with the distributed loop forced: building the frame
+    * leaves its level barriers cached and tracked, where sp17 itself takes
+    * the driver search at sf0.001 and tracks nothing. */
+  private def forcedPathPlus: DataFrame = {
+    import graft.sparql._
+    PathCompiler.compile(Store.quads(spark, sf0001), TConst(Term.iri("person:0")),
+      PRange(PLink("http://schema.org/knows"), 1, None), TVar("x"), None,
+      Some(Store.triples(spark, sf0001)), localMaxEdges = 0)
+  }
+
   test("a release on another thread leaves this thread's broadcast and closure caches alone") {
-    // dd10 reads a tracked Bloom-filter broadcast, sp17 tracked barrier RDDs
+    // dd10 reads a tracked Bloom-filter broadcast, the forced path frame
+    // tracked level barriers
     val gates = Seq("dd10_bloom_incremental", "sp17_path_plus")
-    val expected = serial(gates)
-    Caches.release()
+    val build: Map[String, () => DataFrame] =
+      gates.map(g => g -> (() => SparkEntry.queries(g)(spark, sf0001))).toMap +
+        ("forced knows+" -> (() => forcedPathPlus))
+    val expected = build.map { case (n, f) =>
+      val r = f().collect().map(_.toString).toSeq.sorted; Caches.release(); n -> r }
+    assert(expected("forced knows+").size == 20)
     val before = persistentIds
-    val frames = gates.map(g => g -> SparkEntry.queries(g)(spark, sf0001))
-    val other = new Thread(() => Caches.release())
-    other.start()
-    other.join()
-    try frames.foreach { case (g, df) =>
-      assert(df.collect().map(_.toString).toSeq.sorted == expected(g), g)
+    val frames = build.map { case (n, f) => n -> f() }
+    try {
+      val held = addedSince(before)
+      assert(held.nonEmpty, "the forced path search left no cached level")
+      val other = new Thread(() => Caches.release())
+      other.start()
+      other.join()
+      assert(held.subsetOf(persistentIds), "another thread's release dropped this thread's caches")
+      frames.foreach { case (g, df) =>
+        assert(df.collect().map(_.toString).toSeq.sorted == expected(g), g)
+      }
     } finally Caches.release()
     assert(addedSince(before).isEmpty, "the owner's release frees what it registered")
   }

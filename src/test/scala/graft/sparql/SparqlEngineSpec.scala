@@ -229,35 +229,28 @@ class SparqlEngineSpec extends SparkSpec {
     intercept[SparqlParseException] { selRing("SELECT ?x WHERE { <n0> schema:knows{3,2} ?x }") }
   }
 
-  test("closure frontier-fallback path (large-set mode) matches doubling mode") {
-    import org.apache.spark.sql.functions.col
-    val edges = ringQuads.filter(col("predicate") === "http://schema.org/knows")
-      .selectExpr("concat('0\u0001', subject, '\u0001\u0001') AS s",
-        "concat('0\u0001', obj_value, '\u0001\u0001') AS o")
-    val viaLocal = PathCompiler.closure(edges).collect().map(_.toSeq).toSet
-    val viaDoubling = PathCompiler.closure(edges, localMaxEdges = 0)
-      .collect().map(_.toSeq).toSet
-    val viaFrontier = PathCompiler.closure(edges, doublingMaxPairs = 0, localMaxEdges = 0)
-      .collect().map(_.toSeq).toSet
-    assert(viaLocal == viaDoubling && viaDoubling == viaFrontier
-      && viaDoubling.size == 25) // 5-ring closure: all pairs
+  private val knowsPlus = PRange(PLink("http://schema.org/knows"), 1, None)
+
+  /** `knows+` over the 5-ring with the driver search and with the
+    * distributed loop forced (`localMaxEdges = 0`). */
+  private def ringPlus(s: TermPattern, o: TermPattern): Seq[Set[Seq[String]]] =
+    Seq(PathCompiler.LocalClosureMaxEdges, 0L).map { localMax =>
+      val rows = PathCompiler.compile(ringQuads, s, knowsPlus, o, None, None, localMax)
+        .collect().map(_.toSeq.map { case t: org.apache.spark.sql.Row => t.getAs[String]("value") })
+        .toSet
+      graft.Caches.release()
+      rows
+    }
+
+  test("p+ var-var: the driver search and the distributed loop agree") {
+    val Seq(viaDriver, viaLoop) = ringPlus(TVar("s"), TVar("o"))
+    assert(viaDriver == viaLoop && viaDriver.size == 25) // 5-ring: all pairs
   }
 
-  test("seeded closure (both strategies) equals global closure filtered to the seed") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val edges = ringQuads.filter(col("predicate") === "http://schema.org/knows")
-      .selectExpr("concat('0\u0001', subject, '\u0001\u0001') AS s",
-        "concat('0\u0001', obj_value, '\u0001\u0001') AS o")
-    val seedEnc = "0\u0001n0\u0001\u0001"
-    val seeds = Seq((seedEnc, seedEnc)).toDF("seed", "n")
-    val expected = PathCompiler.closure(edges).filter(col("s") === seedEnc)
-      .select(col("o")).collect().map(_.getString(0)).toSet
-    val small = PathCompiler.seededClosure(edges, seeds)
-      .select(col("n")).collect().map(_.getString(0)).toSet
-    val bfs = PathCompiler.seededClosure(edges, seeds, doublingMaxPairs = 0)
-      .select(col("n")).collect().map(_.getString(0)).toSet
-    assert(small == expected && bfs == expected && expected.size == 5)
+  test("seeded p+ (driver and distributed) equals the var-var rows filtered to the seed") {
+    val expected = ringPlus(TVar("s"), TVar("o")).head.collect { case Seq("n0", o) => Seq(o) }
+    val Seq(viaDriver, viaLoop) = ringPlus(TConst(Term.iri("n0")), TVar("x"))
+    assert(viaDriver == expected && viaLoop == expected && expected.size == 5)
   }
 
   test("review regressions: trailing dot, OPTIONAL-first join, unit existence") {
