@@ -8,13 +8,14 @@ import scala.collection.mutable
 /** Dev profiling main (optimization guide §1.1 "empirical" loop, headless):
   * runs each named gate twice untimed (JIT/codegen/footer warm-up, mirroring
   * Bench's protocol), then once instrumented, and prints a per-stage table —
-  * wall time, task count, executor run time, input/shuffle bytes — so the
-  * expensive stage and its cost class (compute vs shuffle vs scheduling) are
-  * visible without the UI. The header line also counts the instrumented
-  * run's Spark jobs and generated-code compiles (the delta of Spark's
-  * `CodegenMetrics.METRIC_COMPILATION_TIME` count), so a warm gate that
-  * still compiles classes shows it. Dev-only; never part of the driver
-  * contract.
+  * wall time, task count, executor run time, input rows and bytes, shuffle
+  * bytes — so the expensive stage and its cost class (compute vs shuffle vs
+  * scheduling) are visible without the UI. The header line also counts the
+  * instrumented run's Spark jobs and generated-code compiles (the delta of
+  * Spark's `CodegenMetrics.METRIC_COMPILATION_TIME` count), so a warm gate
+  * that still compiles classes shows it, and the rows its scans read (the
+  * sum of the stages' `inputMetrics.recordsRead`). Dev-only; never part of
+  * the driver contract.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   *     java -cp ... graft.ProfileGate us3_subject_merge dd17_canonical_pick
@@ -23,7 +24,7 @@ object ProfileGate {
 
   private case class St(name: String, var wallMs: Long = 0, var tasks: Int = 0,
       var runMs: Long = 0, var cpuMs: Long = 0, var shReadMB: Double = 0,
-      var shWriteMB: Double = 0, var inputMB: Double = 0)
+      var shWriteMB: Double = 0, var inputMB: Double = 0, var inputRows: Long = 0)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -62,6 +63,7 @@ object ProfileGate {
           st.shReadMB = m.shuffleReadMetrics.totalBytesRead / 1e6
           st.shWriteMB = m.shuffleWriteMetrics.bytesWritten / 1e6
           st.inputMB = m.inputMetrics.bytesRead / 1e6
+          st.inputRows = m.inputMetrics.recordsRead
           stages(si.stageId) = st
         }
     })
@@ -84,11 +86,12 @@ object ProfileGate {
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.clearJobGroup()
       drained.await(60, java.util.concurrent.TimeUnit.SECONDS)
-      println(f"===== $name%s rows=$n%d wall=$dt%.3f s  jobs=$jobs%d  stages=${stages.size}%d  compiles=$compiles%d =====")
-      println(f"${"stageId"}%8s ${"wallMs"}%7s ${"tasks"}%5s ${"runMs"}%7s ${"cpuMs"}%7s ${"inMB"}%8s ${"shRdMB"}%8s ${"shWrMB"}%8s  name")
       val byId = stages.toSeq.sortBy(_._1)
+      val inputRows = byId.map(_._2.inputRows).sum
+      println(f"===== $name%s rows=$n%d wall=$dt%.3f s  jobs=$jobs%d  stages=${stages.size}%d  compiles=$compiles%d  inRows=$inputRows%d =====")
+      println(f"${"stageId"}%8s ${"wallMs"}%7s ${"tasks"}%5s ${"runMs"}%7s ${"cpuMs"}%7s ${"inRows"}%10s ${"inMB"}%8s ${"shRdMB"}%8s ${"shWrMB"}%8s  name")
       for ((id, s) <- byId)
-        println(f"$id%8d ${s.wallMs}%7d ${s.tasks}%5d ${s.runMs}%7d ${s.cpuMs}%7d ${s.inputMB}%8.1f ${s.shReadMB}%8.1f ${s.shWriteMB}%8.1f  ${s.name}%s")
+        println(f"$id%8d ${s.wallMs}%7d ${s.tasks}%5d ${s.runMs}%7d ${s.cpuMs}%7d ${s.inputRows}%10d ${s.inputMB}%8.1f ${s.shReadMB}%8.1f ${s.shWriteMB}%8.1f  ${s.name}%s")
       val sumWall = byId.map(_._2.wallMs).sum
       println(f"   total stage wall = $sumWall%d ms over ${stages.size}%d stages (gaps = driver/planning time)")
     }

@@ -2,7 +2,6 @@ package graft.catalog
 
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** User/group directory operators (reference `operations/src/`):
@@ -17,8 +16,8 @@ import org.apache.spark.sql.functions._
   *  - paged realm-scoped user listing (`list_users.rs:66-183`): limit
   *    clamped to ≥ 1, the limit+1 probe decides `is_truncated`, cursor =
   *    last returned user id, strictly-after resume;
-  *  - offset-paged group listing (`list_groups.rs:29-66`): scan limit =
-  *    offset+limit (min 1), skip(offset).take(limit) in group-id order;
+  *  - offset-paged group listing (`list_groups.rs:29-66`):
+  *    skip(offset).take(limit) in group-id order;
   *  - metadata-document listing (`list_metadata_documents.rs:99-140`): the
   *    group's registry rows anti-joined against DELETED graph-lifecycle
   *    records — the deleted set is collected once and applied as a filter,
@@ -26,9 +25,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale: the directory keyspaces are control-plane-sized but the operators
   * are written for the data-plane case anyway — request batches broadcast
-  * into the store scan (the point-read analog), listings are prefix-filtered
-  * TakeOrdered pages, and the lifecycle anti-join broadcasts the deleted
-  * set (bounded by the graph catalog, not the corpus).
+  * into the store scan (the point-read analog), listings are
+  * [[Listing.page]] look-aheads over filtered scans, and the lifecycle
+  * anti-join broadcasts the deleted set (bounded by the graph catalog, not
+  * the corpus).
   */
 object Directory {
 
@@ -179,28 +179,15 @@ object Directory {
     val clamped = math.max(limit, 1) // list_users.rs:67
     var u = users.filter(col("realm") === realm)
     startAfter.foreach(c => u = u.filter(col("user_id") > c))
-    val total = u.agg(count(lit(1)).as("__n"))
-    val w = Window.partitionBy(lit(0))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    u.select("user_id", "name").orderBy("user_id").limit(clamped)
-      .crossJoin(broadcast(total))
-      .withColumn("is_truncated", col("__n") > clamped)
-      .withColumn("next_start_after",
-        when(col("is_truncated"), max(col("user_id")).over(w)))
-      .drop("__n")
+    Listing.page(u.select("user_id", "name"), Seq(col("user_id")), clamped,
+      cursor = Seq("next_start_after" -> col("user_id")))
   }
 
   /** One offset-paged group listing page (`list_groups.rs:29-66`): group-id
     * order, `skip(offset).take(limit)`. */
-  def listGroups(groups: DataFrame, limit: Int, offset: Int): DataFrame = {
-    val scanLimit = math.max(offset + limit, 1) // list_groups.rs:46
-    val w = Window.partitionBy(lit(0)).orderBy(col("group_id"))
-    groups.select("group_id", "name", "realm")
-      .orderBy("group_id").limit(scanLimit)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") > offset && col("__rn") <= offset + limit)
-      .drop("__rn")
-  }
+  def listGroups(groups: DataFrame, limit: Int, offset: Int): DataFrame =
+    Listing.page(groups.select("group_id", "name", "realm"),
+      Seq(col("group_id")), limit, offset).drop("is_truncated")
 
   /** lifecycle(graph_iri, status) — graph lifecycle records; only
     * `Deleted` rows suppress listings (`list_metadata_documents.rs:108-116`).

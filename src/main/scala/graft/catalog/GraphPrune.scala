@@ -1,7 +1,6 @@
 package graft.catalog
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Metadata graph-prune queue (reference
@@ -33,8 +32,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale: the tombstone pass is two hash aggregations plus one semi-join
   * against the (bounded) store and one join against the IRI index keyed by
-  * document; the drain page is a bounded TakeOrdered (cap 128) and the
-  * group ladder one aggregation per graph. Nothing scales with corpus
+  * document; the drain page is a [[Listing.page]] look-ahead (cap 128) and
+  * the group ladder one aggregation per graph. Nothing scales with corpus
   * size. */
 object GraphPrune {
 
@@ -80,14 +79,15 @@ object GraphPrune {
     * has_more_due, next_due_at_ms)`. */
   def drain(jobs: DataFrame, lifecycle: DataFrame, store: DataFrame,
       nowMs: Long, limit: Int = PruneBatchSize): DataFrame = {
-    val due = jobs.filter(col("due_at_ms") <= nowMs)
-    val page = due.orderBy("graph_iri", "seq").limit(limit)
-    val meta = due.agg(count(lit(1)).as("__n")).crossJoin(
-      page.agg(max(struct(col("graph_iri"), col("seq"))).as("__cutoff")))
+    val page = Listing.page(jobs.filter(col("due_at_ms") <= nowMs),
+      Seq(col("graph_iri"), col("seq")), limit)
+    val meta = page.agg(
+      coalesce(max(col("is_truncated")), lit(false)).as("has_more_due"),
+      max(struct(col("graph_iri"), col("seq"))).as("__cutoff"))
     // wake-up hint over the scanned prefix (whole keyspace if page unfilled)
     val hint = jobs.filter(col("due_at_ms") > nowMs)
       .crossJoin(broadcast(meta))
-      .filter(col("__n") <= limit ||
+      .filter(!col("has_more_due") ||
         struct(col("graph_iri"), col("seq")) < col("__cutoff"))
       .agg(min(col("due_at_ms")).as("next_due_at_ms"))
 
@@ -111,8 +111,7 @@ object GraphPrune {
       .withColumn("new_attempts", col("__gp_n"))
       .withColumn("new_due_at_ms", when(col("verdict") === "rescheduled",
         lit(nowMs) + queueBackoff(col("__gp_n"))))
-      .crossJoin(broadcast(meta.select((col("__n") > limit)
-        .as("has_more_due"))))
+      .crossJoin(broadcast(meta.select("has_more_due")))
       .crossJoin(broadcast(hint))
       .select(col("graph_iri"), col("n_jobs"), col("verdict"),
         col("processed"), col("new_attempts"), col("new_due_at_ms"),

@@ -15,9 +15,12 @@ import org.apache.spark.sql.functions._
   *  - bucket search (`search_buckets.rs:88,144`): case-insensitive substring,
   *    `ws-` workspaces excluded.
   *
-  * Scale: listing is a prefix-bounded scan (predicate pushdown on a sorted
-  * key column at 100 TB — the parquet min/max stats make this the reference's
-  * LSM range scan), one bounded window for heads, and a TakeOrdered(max_keys).
+  * Scale: `objects` computes `bucket` and `key` from lineitem columns, so
+  * no ListObjectsV2 or ListObjectVersions predicate reaches the scan: each
+  * request reads the whole object table, windows heads once, and ends in a
+  * TakeOrdered(max_keys). The delimiter listing derives objects and common
+  * prefixes in one pass. Every listing with a truncation trailer decides it
+  * with [[page]], a limit+1 look-ahead, never a count of its whole input.
   */
 object Listing {
 
@@ -33,6 +36,31 @@ object Listing {
       .otherwise(lit(null))
   }
 
+  /** One page of `rows` in `order`: rows offset+1..offset+limit, with the
+    * reference's limit+1 look-ahead (`notifications/list.rs:64-175`,
+    * `list_users.rs:66-183`) deciding whether more follow. One bounded
+    * TakeOrdered keeps offset+limit+1 rows and one single-partition window
+    * numbers them, so nothing counts the whole input. Adds `is_truncated`
+    * (the look-ahead row exists, i.e. more than offset+limit rows) and, per
+    * `(name, c)` of `cursor`, the page's last row's `c` when truncated, else
+    * null. */
+  private[graft] def page(rows: DataFrame, order: Seq[Column], limit: Int,
+      offset: Int = 0, cursor: Seq[(String, Column)] = Nil): DataFrame = {
+    val end = offset + limit
+    val w = Window.partitionBy(lit(0)).orderBy(order: _*)
+    val all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val truncated = count(lit(1)).over(all) > end
+    // nth_value counts from 1; an empty page (end 0) keeps no row anyway
+    val last = cursor.map { case (name, c) =>
+      when(truncated, nth_value(c, math.max(end, 1)).over(all)).as(name) }
+    rows.orderBy(order: _*).limit(end + 1)
+      .select(Seq(col("*"), row_number().over(w).as("__rn"),
+        truncated.as("is_truncated")) ++ last: _*)
+      .filter(col("__rn") > offset && col("__rn") <= end)
+      .drop("__rn")
+      .orderBy(order: _*)
+  }
+
   /** One ListObjectsV2 page: rows (kind ∈ Object|CommonPrefix, name, size). */
   def listObjectsV2(objects: DataFrame, bucket: String, prefix: String,
       delimiter: Option[String], startAfter: Option[String],
@@ -41,17 +69,19 @@ object Listing {
       .filter(col("bucket") === bucket && col("key").startsWith(prefix))
     delimiter match {
       case Some(d) =>
-        // continuation resumes after the last *emitted* name — a common
-        // prefix cursor must skip every key under it (list_objects_v2.rs:60-74)
-        var withCp = h.withColumn("cp", commonPrefixOf(col("key"), prefix, d))
-        startAfter.foreach(c => withCp = withCp.filter(coalesce(col("cp"), col("key")) > c))
-        val prefixes = withCp.filter(col("cp").isNotNull)
-          .select(lit("CommonPrefix").as("kind"), col("cp").as("name"),
-            lit(null).cast("long").as("size"))
-          .distinct()
-        val entries = withCp.filter(col("cp").isNull)
-          .select(lit("Object").as("kind"), col("key").as("name"), col("size"))
-        prefixes.union(entries).orderBy(col("name")).limit(maxKeys)
+        // one pass over the heads: a key under a further delimiter folds
+        // into its common prefix. Heads hold one row per key and no prefix
+        // (ending in the delimiter) equals a leaf key, so `distinct` only
+        // merges a prefix's keys. Continuation resumes after the last
+        // *emitted* name, so a common prefix cursor skips every key under
+        // it (list_objects_v2.rs:60-74).
+        val cp = commonPrefixOf(col("key"), prefix, d)
+        var entries = h.select(
+          when(cp.isNull, "Object").otherwise("CommonPrefix").as("kind"),
+          coalesce(cp, col("key")).as("name"),
+          when(cp.isNull, col("size")).as("size"))
+        startAfter.foreach(c => entries = entries.filter(col("name") > c))
+        entries.distinct().orderBy(col("name")).limit(maxKeys)
       case None =>
         var hh = h
         startAfter.foreach(c => hh = hh.filter(col("key") > c))
@@ -109,8 +139,7 @@ object Listing {
     * window is per-(bucket,key) map-side under the clustered store layout;
     * the location join is hash-equi against the content-addressed keyspace
     * (data-plane-sized — deliberately NO broadcast hint, AQE decides); the
-    * page is a bounded TakeOrdered + ≤max_keys trailer window, no global
-    * sort. */
+    * page is a [[page]] look-ahead, no global sort. */
   def listObjectVersionsPaged(versions: DataFrame, locations: DataFrame,
       bucket: String, prefix: String = "", delimiter: Option[String] = None,
       keyMarker: Option[String] = None, versionIdMarker: Option[String] = None,
@@ -161,24 +190,11 @@ object Listing {
         when(col("__mat"), col("__loc_backend")).as("backend"),
         when(!col("is_delete_marker"), col("__ref")).as("cached_meta"),
         col("created_at_ms"), col("version_ord").as("__ord"))
-    val entries = prefixes.unionByName(items)
-    val total = entries.agg(count(lit(1)).as("__n"))
-    // page + trailer: ≤ max_keys rows by construction, so the
-    // single-partition windows are bounded
-    val page = entries.orderBy(col("name"), col("__ord").desc_nulls_last)
-      .limit(maxKeys)
-    val wAll = Window.partitionBy(lit(0))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val wOrd = Window.partitionBy(lit(0))
-      .orderBy(col("name"), col("__ord").desc_nulls_last)
-    page.crossJoin(broadcast(total))
-      .withColumn("__rn", row_number().over(wOrd))
-      .withColumn("is_truncated", col("__n") > maxKeys)
-      .withColumn("next_key_marker", when(col("is_truncated"),
-        max(when(col("__rn") === maxKeys, col("name"))).over(wAll)))
-      .withColumn("next_version_id_marker", when(col("is_truncated"),
-        max(when(col("__rn") === maxKeys, col("version_ulid"))).over(wAll)))
-      .drop("__n", "__rn", "__ord")
+    page(prefixes.unionByName(items),
+      Seq(col("name"), col("__ord").desc_nulls_last), maxKeys,
+      cursor = Seq("next_key_marker" -> col("name"),
+        "next_version_id_marker" -> col("version_ulid")))
+      .drop("__ord")
   }
 
   /** Case-insensitive bucket substring search, excluding `ws-` workspaces. */
@@ -235,8 +251,8 @@ object Listing {
     *
     * Scale: the part scan is prefix-bounded by upload_id (PART_SCAN_LIMIT
     * 10_000, `list_parts.rs:14` — one upload's parts ALWAYS fit a page
-    * read), so the filter pushes to the scan and the page relation is ≤
-    * maxParts+ rows before the bounded TakeOrdered. */
+    * read), so the filter pushes to the scan and the page is a [[page]]
+    * look-ahead over that one upload's parts. */
   def listParts(uploads: DataFrame, parts: DataFrame, uploadId: String,
       partNumberMarker: Option[Int] = None, maxParts: Int = 1000): DataFrame = {
     val open = uploads
@@ -246,18 +262,8 @@ object Listing {
     partNumberMarker.foreach(m => p = p.filter(col("part_number") > m))
     val survivors = p.join(broadcast(open), Seq("upload_id"))
       .select(col("bucket"), col("key"), col("part_number"), col("size"), col("hash"))
-    val total = survivors.agg(count(lit(1)).as("__n"))
-    // page + scalar trailer columns: ≤ maxParts rows by construction, so the
-    // single-partition window is bounded
-    val w = Window.partitionBy(lit(0))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    survivors.orderBy("part_number").limit(maxParts)
-      .crossJoin(broadcast(total))
-      .withColumn("is_truncated", col("__n") > maxParts)
-      .withColumn("next_part_number_marker",
-        when(col("is_truncated"), max(col("part_number")).over(w)))
-      .drop("__n")
-      .orderBy("part_number")
+    page(survivors, Seq(col("part_number")), maxParts,
+      cursor = Seq("next_part_number_marker" -> col("part_number")))
   }
 
   /** One ListMultipartUploads page (reference
@@ -316,16 +322,8 @@ object Listing {
     var b = buckets.filter(col("group_id") === groupId)
     prefix.foreach(p => b = b.filter(col("bucket").startsWith(p)))
     continuationToken.foreach(t => b = b.filter(col("bucket") > t))
-    val total = b.agg(count(lit(1)).as("__n"))
-    val w = Window.partitionBy(lit(0))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    b.orderBy("bucket").limit(maxN)
-      .crossJoin(broadcast(total))
-      .withColumn("is_truncated", col("__n") > maxN)
-      .withColumn("continuation_token",
-        when(col("is_truncated"), max(col("bucket")).over(w)))
-      .drop("__n")
-      .orderBy("bucket")
+    page(b, Seq(col("bucket")), maxN,
+      cursor = Seq("continuation_token" -> col("bucket")))
   }
 
   /** Unified-search limits (reference `api/src/routes/search.rs:27-29`). */

@@ -132,16 +132,6 @@ object Notifications {
         (col("unread_before") - col("marked")).as("unread_after"))
   }
 
-  /** One inbox page (`list.rs:64-175`): newest first, limit clamped to
-    * 1..[[ListMaxLimit]], cursor `(created_at_ms, notification_id)` resumes
-    * STRICTLY AFTER in key order (older timestamp, or same timestamp and a
-    * larger id — the inverted-timestamp encoding makes both one byte-wise
-    * `>`), truncation detected by the reference's limit+1 look-ahead and
-    * the next cursor is the LAST RETURNED row's identity.
-    *
-    * Output rows: (created_at_ms, notification_id, read, is_truncated,
-    * next_cursor_ts, next_cursor_id) — the cursor trailer repeats on every
-    * row of the page, like the other paged listings here. */
   /** Resource-event → notification fan-out (`routing.rs:37-113`).
     *
     * Pinned semantics:
@@ -195,6 +185,17 @@ object Notifications {
     direct.unionByName(adminAdds).unionByName(onboarded)
   }
 
+  /** One inbox page (`list.rs:64-175`): newest first, limit clamped to
+    * 1..[[ListMaxLimit]], cursor `(created_at_ms, notification_id)` resumes
+    * STRICTLY AFTER in key order (older timestamp, or same timestamp and a
+    * larger id — the inverted-timestamp encoding makes both one byte-wise
+    * `>`), truncation detected by the reference's limit+1 look-ahead
+    * ([[Listing.page]]) and the next cursor is the LAST RETURNED row's
+    * identity.
+    *
+    * Output rows: (created_at_ms, notification_id, read, is_truncated,
+    * next_cursor_ts, next_cursor_id) — the cursor trailer repeats on every
+    * row of the page, like the other paged listings here. */
   def listPage(inbox: DataFrame, recipient: String, cursorTs: Option[Long],
       cursorId: Option[String], limit: Int): DataFrame = {
     val lim = limit.max(1).min(ListMaxLimit)
@@ -204,25 +205,10 @@ object Notifications {
           (col("created_at_ms") === ts && col("notification_id") > id)
       case _ => lit(true)
     }
-    // limit+1 look-ahead as a bounded TakeOrdered; every window below runs
-    // over at most lim+1 rows
-    val page = inbox
-      .filter(col("recipient") === recipient && afterCursor)
-      .orderBy(col("created_at_ms").desc, col("notification_id"))
-      .limit(lim + 1)
-    val w = Window.orderBy(col("created_at_ms").desc, col("notification_id"))
-    val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    page
-      .withColumn("rn", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(full))
-      .withColumn("is_truncated", col("n") === lim + 1)
-      .withColumn("next_cursor_ts",
-        when(col("is_truncated"),
-          max(when(col("rn") === lim, col("created_at_ms"))).over(full)))
-      .withColumn("next_cursor_id",
-        when(col("is_truncated"),
-          max(when(col("rn") === lim, col("notification_id"))).over(full)))
-      .filter(col("rn") <= lim)
+    Listing.page(inbox.filter(col("recipient") === recipient && afterCursor),
+      Seq(col("created_at_ms").desc, col("notification_id")), lim,
+      cursor = Seq("next_cursor_ts" -> col("created_at_ms"),
+        "next_cursor_id" -> col("notification_id")))
       .select(col("created_at_ms"), col("notification_id"),
         col("read_at_ms").isNotNull.as("read"),
         col("is_truncated"), col("next_cursor_ts"), col("next_cursor_id"))

@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   *    timer's wake-up hint.
   *
   * Scale: the fold is one per-identity rank window (map-side top-1 under a
-  * key-clustered layout); the drain is a bounded TakeOrdered over the due
-  * predicate plus one scalar aggregate for the wake-up hint — the scan cap
-  * means the page never depends on queue depth. */
+  * key-clustered layout); the drain is a [[Listing.page]] look-ahead over
+  * the due predicate plus one scalar aggregate for the wake-up hint — the
+  * scan cap means the page never depends on queue depth. */
 object ReplQueue {
 
   val ReplicationBatchSize = 64 // queue.rs:44
@@ -41,22 +41,22 @@ object ReplQueue {
   /** One due-drain page over the folded store. */
   def dueScan(store: DataFrame, nowMs: Long,
       limit: Int = ReplicationBatchSize): DataFrame = {
-    val due = store.filter(col("due_at_ms") <= nowMs)
-    val page = due.orderBy("ident").limit(limit)
-    // one scalar meta row: total due count + the page's cutoff identity
-    val meta = due.agg(count(lit(1)).as("__n"))
-      .crossJoin(page.agg(max(col("ident")).as("__cutoff")))
+    val page = Listing.page(store.filter(col("due_at_ms") <= nowMs),
+      Seq(col("ident")), limit)
+    // one scalar meta row: whether more due jobs follow the page (false for
+    // an empty page) + the page's cutoff identity
+    val meta = page.agg(
+      coalesce(max(col("is_truncated")), lit(false)).as("__more"),
+      max(col("ident")).as("__cutoff"))
     // wake-up hint: min future due among records the key-order walk passed
     // before the page filled (whole keyspace when the page did not fill);
     // linear scan against the broadcast 1-row meta, never page x future
     val hint = store.filter(col("due_at_ms") > nowMs)
       .crossJoin(broadcast(meta))
-      .filter(col("__n") <= limit || col("ident") < col("__cutoff"))
+      .filter(!col("__more") || col("ident") < col("__cutoff"))
       .agg(min(col("due_at_ms")).as("next_due_at_ms"))
-    page.crossJoin(broadcast(meta))
-      .withColumn("has_more_due", col("__n") > limit)
-      .crossJoin(broadcast(hint))
-      .select("ident", "attempts", "due_at_ms", "seq", "has_more_due",
-        "next_due_at_ms")
+    page.crossJoin(broadcast(hint))
+      .select(col("ident"), col("attempts"), col("due_at_ms"), col("seq"),
+        col("is_truncated").as("has_more_due"), col("next_due_at_ms"))
   }
 }

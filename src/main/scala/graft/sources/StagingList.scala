@@ -1,7 +1,7 @@
 package graft.sources
 
+import graft.catalog.Listing
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Staging-source listing (reference `operations/src/staging/list_source.rs`
@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale: the path predicate pushes into the file-catalog scan, directory
   * inference is a per-row array transform + distinct bounded by the tree
-  * fan-out, and the page is a TakeOrdered(offset+limit) — never a global
-  * sort over the subtree. */
+  * fan-out, and the page is a [[graft.catalog.Listing.page]] look-ahead over
+  * offset+limit+1 rows — never a global sort or count over the subtree. */
 object StagingList {
 
   /** files: (path, size, modified_ms) — the file catalog under some root. */
@@ -52,15 +52,9 @@ object StagingList {
           lit(null).cast("long").as("modified_ms"))
     val entries =
       if (filesOnly) fileEntries else fileEntries.unionByName(dirEntries)
-    val total = entries.agg(count(lit(1)).as("__n"))
-    val page = entries.orderBy("path").limit(offset + limit)
-    val w = Window.partitionBy(lit(0)).orderBy(col("path"))
-    page.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") > offset)
-      .crossJoin(broadcast(total))
-      .withColumn("truncated", col("__n") > offset + limit)
+    Listing.page(entries, Seq(col("path")), limit, offset)
+      .withColumnRenamed("is_truncated", "truncated")
       .withColumn("next_offset",
         when(col("truncated"), lit(offset + limit).cast("long")))
-      .drop("__rn", "__n", "__rest")
   }
 }

@@ -94,18 +94,13 @@ object PathCompiler {
   }
 
 
-  /** lineage barrier — see [[graft.Caches.barrier]] for why localCheckpoint
-    * cannot be used. The caller unpersists superseded rounds. */
-  private def barrier(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[_]) =
-    graft.Caches.barrier(df)
-
-  /** [[barrier]] for a search level, behind an RDD shuffle. The generated
-    * code of a round's aggregate holds its plan, and the plan reaches the
-    * barrier of the level the round read, so a chain of plain barriers
-    * puts every earlier round into each task: a 70-hop walk overflowed the
-    * stack deserializing one. An RDD shuffle's parent is transient, so a
-    * level's tasks carry their own round only; its rows still recompute
-    * from lineage once released. */
+  /** [[graft.Caches.barrier]] for a search level, behind an RDD shuffle.
+    * The generated code of a round's aggregate holds its plan, and the plan
+    * reaches the barrier of the level the round read, so a chain of plain
+    * barriers puts every earlier round into each task: a 70-hop walk
+    * overflowed the stack deserializing one. An RDD shuffle's parent is
+    * transient, so a level's tasks carry their own round only; its rows
+    * still recompute from lineage once released. */
   private def levelBarrier(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
     val rows = df.queryExecution.toRdd.map(_.copy())
     val rdd = rows.repartition(math.max(1, rows.getNumPartitions)).cache()
@@ -270,7 +265,7 @@ object PathCompiler {
     * others are released as soon as the next level is materialized. */
   private def distributedLevels(base0: DataFrame, cur: Option[DataFrame],
       min: Int, max: Option[Int]): DataFrame = {
-    val (base, baseRdd) = barrier(base0.dropDuplicates())
+    val (base, baseRdd) = graft.Caches.barrier(base0.dropDuplicates())
     val start = cur.getOrElse(nodes(base).select(col("n").as("seed"), col("n")))
     val kept = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var keptRows = 0L

@@ -607,6 +607,32 @@ class PlanSpec extends SparkSpec {
     assert(!p2.contains("BroadcastNestedLoopJoin"), p2)
   }
 
+  test("lu1/cat11/cat1: a listing scans its input once and never aggregates the unpaged rows") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    def physical(name: String): SparkPlan =
+      SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan // the initial plan
+        case other => other
+      }
+    def scans(p: SparkPlan, table: String): Int = p.collect {
+      case s: FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.getName == s"$table.parquet") => s
+    }.size
+    // lu1 and cat11 each union three pages over customer; a page is a
+    // limit+1 look-ahead, so no count of the filtered input is planned
+    for (name <- Seq("lu1_list_users", "cat11_list_buckets")) {
+      val p = physical(name)
+      assert(scans(p, "customer") == 3, s"$name: one customer scan per page expected:\n$p")
+      assert(p.collect { case a: BaseAggregateExec => a }.isEmpty,
+        s"$name aggregates rows outside its pages:\n$p")
+    }
+    // objects and common prefixes come from one pass over the heads
+    val p = physical("cat1_list_v2_prefixes")
+    assert(scans(p, "lineitem") == 1, s"cat1: one lineitem scan expected:\n$p")
+  }
+
   test("ann15: exact ground truth is computed once and reused across the sweep") {
     val p = plan("ann15_recall_curve")
     // the persisted exact side must appear as InMemoryTableScan in the

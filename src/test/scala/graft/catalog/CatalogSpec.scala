@@ -167,6 +167,12 @@ class CatalogSpec extends SparkSpec {
     assert(p2.map(_.getAs[Int]("part_number")).toSeq == Seq(7))
     assert(p2.forall(!_.getAs[Boolean]("is_truncated"))) // final page: no marker
     assert(p2.forall(_.isNullAt(p2.head.fieldIndex("next_part_number_marker"))))
+    // an exactly full page is not truncated: no part follows the 4th
+    val full = Listing.listParts(mpUploads, mpParts, "u01", None, maxParts = 4)
+      .collect()
+    assert(full.map(_.getAs[Int]("part_number")).toSeq == Seq(1, 2, 3, 7))
+    assert(full.forall(!_.getAs[Boolean]("is_truncated")))
+    assert(full.forall(_.isNullAt(full.head.fieldIndex("next_part_number_marker"))))
   }
 
   test("ListParts: missing or closed upload yields an empty page (NoSuchUpload/UploadNotOpen)") {
@@ -211,6 +217,11 @@ class CatalogSpec extends SparkSpec {
       continuationToken = Some("b-b"), maxBuckets = Some(2)).collect()
     assert(p2.map(_.getString(0)).toSeq == Seq("b-c"))
     assert(p2.forall(!_.getAs[Boolean]("is_truncated")))
+    // an exactly full page is not truncated and carries no token
+    val full = Listing.listBuckets(buckets, "g1", maxBuckets = Some(3)).collect()
+    assert(full.map(_.getString(0)).toSeq == Seq("b-a", "b-b", "b-c"))
+    assert(full.forall(!_.getAs[Boolean]("is_truncated")))
+    assert(full.forall(_.isNullAt(full.head.fieldIndex("continuation_token"))))
     // max_buckets ≤ 0 falls back to the 10k default clamp (list_buckets.rs:117-120)
     assert(Listing.listBuckets(buckets, "g1", maxBuckets = Some(0)).count() == 3)
   }

@@ -50,6 +50,11 @@ class DirectorySpec extends SparkSpec {
     val p2 = Directory.listUsers(users, "realm-0", 5, Some("001")).collect()
     assert(p2.map(_.getString(0)).toSeq == Seq("002") &&
       !p2.head.getAs[Boolean]("is_truncated"))
+    // a limit equal to the realm's user count: full page, not truncated
+    val full = Directory.listUsers(users, "realm-0", 2).collect()
+    assert(full.map(_.getString(0)).toSeq == Seq("001", "002"))
+    assert(full.forall(r => !r.getAs[Boolean]("is_truncated") &&
+      r.isNullAt(r.fieldIndex("next_start_after"))))
   }
 
   test("list groups: skip/take offset paging, limit 0 empty (list_groups.rs)") {
