@@ -14,8 +14,14 @@ import scala.collection.mutable
   * instrumented run's Spark jobs and generated-code compiles (the delta of
   * Spark's `CodegenMetrics.METRIC_COMPILATION_TIME` count), so a warm gate
   * that still compiles classes shows it, and the rows its scans read (the
-  * sum of the stages' `inputMetrics.recordsRead`). Dev-only; never part of
-  * the driver contract.
+  * sum of the stages' `inputMetrics.recordsRead`). That compile count
+  * depends on what ran before in the JVM: Spark's codegen cache holds 100
+  * classes, so earlier gates may have evicted this gate's. The header's
+  * `repeatCompiles` is the compiles of one more identical call right after
+  * the instrumented one, whose classes are then the most recent in the
+  * cache; it counts what the gate compiles on every call (sources that
+  * differ per call), and does not depend on what ran before in the JVM.
+  * Dev-only; never part of the driver contract.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   *     java -cp ... graft.ProfileGate us3_subject_merge dd17_canonical_pick
@@ -86,9 +92,12 @@ object ProfileGate {
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.clearJobGroup()
       drained.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      val repeat0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      try q(spark, sfDir).count() finally graft.Caches.release()
+      val repeatCompiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - repeat0
       val byId = stages.toSeq.sortBy(_._1)
       val inputRows = byId.map(_._2.inputRows).sum
-      println(f"===== $name%s rows=$n%d wall=$dt%.3f s  jobs=$jobs%d  stages=${stages.size}%d  compiles=$compiles%d  inRows=$inputRows%d =====")
+      println(f"===== $name%s rows=$n%d wall=$dt%.3f s  jobs=$jobs%d  stages=${stages.size}%d  compiles=$compiles%d  repeatCompiles=$repeatCompiles%d  inRows=$inputRows%d =====")
       println(f"${"stageId"}%8s ${"wallMs"}%7s ${"tasks"}%5s ${"runMs"}%7s ${"cpuMs"}%7s ${"inRows"}%10s ${"inMB"}%8s ${"shRdMB"}%8s ${"shWrMB"}%8s  name")
       for ((id, s) <- byId)
         println(f"$id%8d ${s.wallMs}%7d ${s.tasks}%5d ${s.runMs}%7d ${s.cpuMs}%7d ${s.inputRows}%10d ${s.inputMB}%8.1f ${s.shReadMB}%8.1f ${s.shWriteMB}%8.1f  ${s.name}%s")

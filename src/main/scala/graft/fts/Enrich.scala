@@ -1,11 +1,9 @@
 package graft.fts
 
-import scala.jdk.CollectionConverters._
-
 import graft.sparql.{Kind, Materialize, RdfTables}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Hit enrichment (reference `search_enrichment.rs`), applied to one page
   * of search hits:
@@ -15,92 +13,128 @@ import org.apache.spark.sql.functions._
   *  - `hit_snippet` (`:42-75`): concat name/description/keywords/identifier
   *    literals, window around the first matching query token, else prefix,
   *    capped length.
+  *
+  * Scale: enrichment runs on the driver only. A page holds at most
+  * [[MaxHitPage]] hits, and their subjects' literals are read by one scan
+  * that the hit graphs prune to their `graph_bucket` directories, bounded
+  * at [[MaxHitLiterals]] rows; past either bound it raises a typed error
+  * rather than falling back to a distributed plan. Its cost is
+  * O(quads-of-hit-graphs), not O(corpus), and it starts at most three jobs:
+  * none for a hit page that is a local relation (as [[Search.page]]
+  * returns), one for the literals and one for the document paths.
   */
 object Enrich {
 
   val SnippetMaxLen = 160
   val SnippetLead = 40
 
-  /** Snippet: window around the first query-token occurrence, else prefix. */
-  val snippetUdf: UserDefinedFunction = udf { (content: String, tokens: Seq[String]) =>
+  /** Snippet of `content`: a window around the first query-token
+    * occurrence, else its prefix; null for null content. */
+  def snippetOf(content: String, tokens: Seq[String]): String =
     if (content == null) null
     else {
       val lower = content.toLowerCase
       val idx = tokens.iterator.map(lower.indexOf(_)).filter(_ >= 0)
         .foldLeft(Int.MaxValue)(math.min)
-      val s =
-        if (idx == Int.MaxValue) content.take(SnippetMaxLen)
-        else {
-          val start = math.max(0, idx - SnippetLead)
-          content.substring(start, math.min(content.length, start + SnippetMaxLen))
-        }
-      s
+      if (idx == Int.MaxValue) content.take(SnippetMaxLen)
+      else {
+        val start = math.max(0, idx - SnippetLead)
+        content.substring(start, math.min(content.length, start + SnippetMaxLen))
+      }
     }
-  }
 
   /** The most hits one [[enrich]] call takes: the deepest page a cursor may
     * reach plus one full page (`search_cursor.rs:13-15`). */
   val MaxHitPage: Int = Search.MaxPaginationDepth + Search.MaxPageSize
 
+  /** The most indexed literals one [[enrich]] call reads for its hits: 100
+    * per hit of a full [[MaxHitPage]]. */
+  val MaxHitLiterals: Int = 100 * MaxHitPage
+
   /** Raised when the hits handed to [[enrich]] exceed [[MaxHitPage]] rows. */
   final class HitPageTooLarge(val limit: Int)
       extends RuntimeException(s"hit page exceeds $limit rows")
 
-  /** Join hits with titles + snippets (the describe-join at
-    * `handle.rs:5286-5292`).
-    *
-    * The hit page is collected once, bounded by [[MaxHitPage]], and carried
-    * on as a local relation, so its search lineage runs exactly once. Quads
-    * are then scoped to the hit graphs by literal `graph_bucket IN` /
-    * `graph_iri IN` predicates, which prune partition directories, and
-    * semi-joined to the broadcast hit (graph, subject) keys. One aggregate
-    * over those literals yields each hit's `name` and snippet `content`: one
-    * quads scan, O(quads-of-hit-subjects), not O(corpus). The title is
-    * `coalesce(name, last IRI segment, document_path)` on the hits.
-    *
-    * Output is 1:1 per hit row, which is load-bearing (r14 ADVICE): the
-    * fts3 page-then-enrich commute (FtsQueries) only holds because these
-    * joins never inflate the hit count. The aggregate is one row per
-    * (graph, subject), and `registry` carries ONE row per graph_iri by
-    * fixture contract (RdfTables.registry derives it 1:1 from documents). */
-  def enrich(hits: DataFrame, quads: DataFrame, registry: DataFrame,
-      query: String): DataFrame = {
-    val spark = hits.sparkSession
-    val rows = hits.limit(MaxHitPage + 1).collect()
-    if (rows.length > MaxHitPage) throw new HitPageTooLarge(MaxHitPage)
-    val hitPage = spark.createDataFrame(rows.toSeq.asJava, hits.schema)
-    val keys = rows.map(r => (r.getAs[String]("graph_iri"), r.getAs[String]("subject_iri"))).distinct
-    val graphs = keys.map(_._1).distinct.toSeq
-    val hitKeys = spark.createDataFrame(keys.toSeq).toDF("graph_iri", "subject")
+  /** Raised when a hit page's subjects carry more than [[MaxHitLiterals]]
+    * indexed literals. */
+  final class HitLiteralsTooLarge(val limit: Int)
+      extends RuntimeException(s"hit page literals exceed $limit rows")
+
+  /** The indexed literals of the hit subjects `subjects` in the hit graphs
+    * `graphs`: (graph_iri, subject, predicate, obj_value). Literal
+    * `graph_bucket IN` / `graph_iri IN` predicates prune the quads'
+    * partition directories and `subject IN` reaches the parquet scan, so
+    * this reads O(quads-of-hit-graphs), not O(corpus). */
+  private[graft] def hitLiterals(quads: DataFrame, graphs: Seq[String],
+      subjects: Seq[String]): DataFrame = {
     val inGraphs = col("graph_iri").isin(graphs: _*)
     val scope =
       if (quads.columns.contains("graph_bucket"))
         col("graph_bucket").isin(graphs.map(g => Materialize.bucketCol(lit(g))): _*) && inGraphs
       else inGraphs
-    val fieldRank = Fts.IndexedFields.values.toSeq.sorted.zipWithIndex.toMap
-    val rank = Fts.IndexedFields.foldLeft(lit(99)) { case (acc, (iri, name)) =>
-      when(col("predicate") === iri, lit(fieldRank(name))).otherwise(acc)
-    }
-    val described = quads
-      .filter(scope && col("obj_kind") === Kind.Literal &&
+    quads
+      .filter(scope && col("subject").isin(subjects: _*) && col("obj_kind") === Kind.Literal &&
         col("predicate").isin(Fts.IndexedFields.keys.toSeq: _*))
-      .join(broadcast(hitKeys), Seq("graph_iri", "subject"), "left_semi")
-      .groupBy(col("graph_iri"), col("subject").as("subject_iri"))
-      .agg(
-        min(when(col("predicate") === RdfTables.SchemaNs + "name", col("obj_value"))).as("name"),
-        array_join(transform(array_sort(collect_list(
-          struct(rank.as("r"), col("obj_value").as("v")))), _.getField("v")), " ").as("content"))
-    val paths = registry.filter(inGraphs).select(col("graph_iri"), col("document_path"))
-    // both sides are at most one row per hit: broadcast them, the static
-    // planner cannot see through the aggregation or the filter
-    hitPage
-      .join(broadcast(described), Seq("graph_iri", "subject_iri"), "left_outer")
-      .join(broadcast(paths), Seq("graph_iri"), "left_outer")
-      .withColumn("title", coalesce(
-        col("name"),
-        nullif(regexp_extract(col("subject_iri"), "([^/#:]+)$", 1), lit("")),
-        col("document_path")))
-      .withColumn("snippet", snippetUdf(col("content"), lit(Search.tokenize(query).toArray)))
-      .drop("name", "document_path", "content")
+      .select(col("graph_iri"), col("subject"), col("predicate"), col("obj_value"))
+  }
+
+  /** Adds `title` and `snippet` to a page of hits (the describe-join at
+    * `handle.rs:5286-5292`), on the driver.
+    *
+    * Three bounded collects: the hit page ([[MaxHitPage]] rows, a local
+    * relation when it comes from [[Search]]), the hit subjects' indexed
+    * literals ([[hitLiterals]], [[MaxHitLiterals]] rows) and the hit graphs'
+    * document paths from `registry`, which carries one row per graph_iri by
+    * fixture contract (RdfTables.registry derives it 1:1 from documents).
+    * Per hit, `name` is the least schema:name literal and `content` joins
+    * its literals ordered by field, then value; the title is
+    * `coalesce(name, last IRI segment, document_path)` and the snippet
+    * [[snippetOf]] the content. The result is a local relation of the hit
+    * columns, less any `snippet`, then `title` and `snippet`.
+    *
+    * Output is 1:1 per hit row, which is load-bearing (r14 ADVICE): the
+    * fts3 page-then-enrich commute (FtsQueries) only holds because
+    * enrichment never inflates the hit count. */
+  def enrich(hits: DataFrame, quads: DataFrame, registry: DataFrame,
+      query: String): DataFrame = {
+    val rows = Search.collectAtMost(hits, MaxHitPage).getOrElse(throw new HitPageTooLarge(MaxHitPage))
+    val Seq(g, s) = Seq("graph_iri", "subject_iri").map(hits.schema.fieldIndex)
+    val kept = hits.schema.fields.indices.filter(hits.schema(_).name != "snippet")
+    val schema = StructType(kept.map(hits.schema(_)) ++
+      Seq(StructField("title", StringType), StructField("snippet", StringType)))
+    if (rows.isEmpty) return Search.local(hits.sparkSession, schema, Nil)
+
+    val keys = rows.map(r => (r.getString(g), r.getString(s))).toSet
+    val graphs = keys.map(_._1).toSeq
+    val literals = Search.collectAtMost(hitLiterals(quads, graphs, keys.map(_._2).toSeq), MaxHitLiterals)
+      .getOrElse(throw new HitLiteralsTooLarge(MaxHitLiterals))
+      .filter(r => keys((r.getString(0), r.getString(1))))
+      .groupBy(r => (r.getString(0), r.getString(1)))
+    val paths = Search.collectAtMost(
+        registry.filter(col("graph_iri").isin(graphs: _*)).select(col("graph_iri"), col("document_path")),
+        graphs.size)
+      .getOrElse(throw new IllegalStateException("registry holds more than one row per hit graph"))
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+
+    val schemaName = RdfTables.SchemaNs + "name"
+    val fieldRank = Fts.IndexedFields.values.toSeq.sorted.zipWithIndex.toMap
+    val rank = Fts.IndexedFields.map { case (iri, name) => iri -> fieldRank(name) }
+    val lastSegment = "([^/#:]+)$".r
+    val tokens = Search.tokenize(query)
+    val out = rows.toSeq.map { r =>
+      val (graph, subject) = (r.getString(g), r.getString(s))
+      val described = literals.getOrElse((graph, subject), Array.empty[Row])
+      val name = described.filter(_.getString(2) == schemaName).map(_.getString(3)).filter(_ != null)
+        .reduceOption((a, b) => if (Search.cmp(a, b) <= 0) a else b)
+      val content =
+        if (described.isEmpty) null
+        else described.filter(!_.isNullAt(3)).map(l => (rank(l.getString(2)), l.getString(3)))
+          .sortWith((a, b) => a._1 < b._1 || (a._1 == b._1 && Search.cmp(a._2, b._2) < 0))
+          .map(_._2).mkString(" ")
+      val segment = Option(subject).flatMap(lastSegment.findFirstMatchIn).map(_.group(1)).filter(_.nonEmpty)
+      val title = name.orElse(segment).orElse(paths.get(graph)).orNull
+      Row.fromSeq(kept.map(r.get) ++ Seq(title, snippetOf(content, tokens)))
+    }
+    Search.local(hits.sparkSession, schema, out)
   }
 }

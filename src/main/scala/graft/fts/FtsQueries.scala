@@ -36,9 +36,10 @@ object FtsQueries {
   }
 
   /** fts3's hit page: BM25 → merge → the first 50 hits, the frame its
-    * enrichment collects. */
-  private[graft] def bm25Page(s: SparkSession, d: String): DataFrame = {
-    val hits = Search.bm25(postings(s, d), "spark merge fast")
+    * enrichment collects. `localMaxPostings` is [[Search.bm25]]'s. */
+  private[graft] def bm25Page(s: SparkSession, d: String,
+      localMaxPostings: Long = Search.LocalScoreMaxPostings): DataFrame = {
+    val hits = Search.bm25(postings(s, d), "spark merge fast", localMaxPostings)
       .withColumn("document_id", regexp_extract(col("graph_iri"), "([0-9]+)$", 1))
       .withColumn("snippet", lit(null: String))
     Search.page(Search.mergeHits(hits), None, 50)

@@ -1,8 +1,8 @@
 package graft.sparql
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
 /** Public SPARQL entry point: text → guarded parse → compiled DataFrame.
   *
@@ -51,16 +51,23 @@ object SparqlEngine {
   }
 
   /** ASK: true iff the pattern has at least one solution. Distributed merge
-    * = any-true (`api.rs:2917-2921`). */
+    * = any-true (`api.rs:2917-2921`). The pattern is evaluated here, by one
+    * `limit(1)` collect that stops at the first solution; the result is a
+    * one-row local frame with the boolean column `ask`. */
   def ask(quads: DataFrame, sparql: String,
       defaultGraph: Option[DataFrame] = None): DataFrame = {
     ExprCompiler.newQueryScope()
     val q = SparqlParser.parse(sparql)
     require(q.form == "ask", s"expected ASK, got ${q.form}")
-    Compiler.compile(quads, q.pattern, defaultGraph)
-      .limit(1)
-      .agg((count(lit(1)) > 0).as("ask"))
+    val pattern = Compiler.compile(quads, q.pattern, defaultGraph)
+    // a limit at the root of a collect plans as CollectLimitExec, which is
+    // not code-generated: a mid-plan limit's generated counter is named per
+    // call (`_limit_counter_<id>`) and compiles new classes on every ASK
+    val any = pattern.select().limit(1).collect().nonEmpty
+    pattern.sparkSession.createDataFrame(java.util.List.of(Row(any)), AskSchema)
   }
+
+  private val AskSchema = StructType(Seq(StructField("ask", BooleanType, nullable = false)))
 
   /** Restrict quads to the caller-visible graphs *before* evaluation — the
     * reference's eager scope selection. `visible` must have a `graph_iri`

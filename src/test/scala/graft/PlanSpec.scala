@@ -38,15 +38,18 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("spark") && p.contains("merge"), s"token filter missing:\n$p")
   }
 
-  test("fts3: enrichment aggregates only hit-scoped quads (broadcast semi-join)") {
-    val p = plan("fts3_bm25_search")
-    // hit keys broadcast + quads semi-joined BEFORE titles/describe aggs:
-    // the collect_list/min aggregations must sit above a LeftSemi join
-    assert(p.contains("LeftSemi"), s"expected hit-scoping semi-join:\n$p")
-    val semiIdx = p.indexOf("LeftSemi")
-    val aggIdx = p.indexOf("collect_list")
-    assert(aggIdx >= 0, s"describe aggregation missing:\n$p")
-    assert(p.contains("BroadcastExchange"), s"hit keys should broadcast:\n$p")
+  test("fts3: enrichment reads only the hit graphs' buckets and hit subjects") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val quads = graft.Store.quads(spark, sf0001)
+    val p = graft.fts.Enrich.hitLiterals(quads, Seq("graph:1", "graph:2"), Seq("doc:1", "doc:2"))
+      .queryExecution.executedPlan
+    val scans = p.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, s"one quads scan expected:\n$p")
+    assert(scans.head.partitionFilters.exists(_.references.exists(_.name == "graph_bucket")),
+      s"hit graphs must prune graph_bucket directories:\n$p")
+    assert(scans.head.dataFilters.exists(f => f.isInstanceOf[org.apache.spark.sql.catalyst.expressions.In] &&
+      f.references.exists(_.name == "subject")), s"hit subjects must reach the scan:\n$p")
+    assert(!p.toString.contains("Aggregate") && !p.toString.contains("Exchange"), p.toString)
   }
 
   test("fts3: hit page folds, scores and merges inside the postings buckets; no corpus aggregate") {
@@ -55,7 +58,8 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.window.WindowExec
-    val page = graft.fts.FtsQueries.bm25Page(spark, sf0001)
+    // a negative bound forces the distributed scoring plan
+    val page = graft.fts.FtsQueries.bm25Page(spark, sf0001, localMaxPostings = -1)
     val p = page.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan // the initial plan, exchanges included
       case other => other
